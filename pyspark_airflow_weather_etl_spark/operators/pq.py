@@ -49,6 +49,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..sources import indexstore as store
+
 SEED = 42
 
 
@@ -876,6 +878,15 @@ def opq_topk_adc(
 
 # --- IVF-PQ append lifecycle (frozen quantizers, batch-keyed deltas) -------
 
+#: IVF-PQ layout: rows under ivf_cell=, frozen meta → codebooks →
+#: (OPQ) rotation → centroids, the creation marker written last.
+#: Overlap strategy FOLD latest-wins, twice (codes, then vectors).
+IVFPQ = store.Layout(
+    subtrees=(("rows", ("batch", "ivf_cell")),),
+    manifest=store.VECTOR_MANIFEST,
+    frozen=("meta", "codebooks", "rotation", "centroids"),
+)
+
 
 def ivfpq_index_append(
     embeddings: DataFrame,
@@ -943,51 +954,20 @@ def ivfpq_index_append(
     anywhere leaves the batch missing from the manifest so probes run
     their latest-wins fold instead of trusting a stale range.
     Returns ``{"batch", "n_rows", "mean_qerr", "drift_ratio"}``."""
-    from pyspark.errors import AnalysisException
-
-    from .retrieval import (
-        _drop_batch_dirs,
-        _drop_manifest_row,
-        _write_batch_keyed,
-    )
-    from .similarity import _manifest_from_agg, ivf_assign, ivf_train_centroids
+    from .similarity import _read_centroids, ivf_assign, ivf_train_centroids
 
     spark = embeddings.sparkSession
-    try:
-        crows = spark.read.parquet(f"{path}/centroids").orderBy("cell")
-        centroids = np.asarray([list(r["c"]) for r in crows.collect()])
-        created = True
-    except AnalysisException:
-        created = False
-    if created:
-        try:
-            meta = spark.read.parquet(f"{path}/meta").collect()[0]
-        except AnalysisException:
-            raise ValueError(
-                f"IVF-PQ index at {path} has centroids but no meta —"
-                " its quantizer shape (m, n_codes, n_cells) is"
-                " unknowable; rebuild the index"
-            )
-        stored = (
-            int(meta["m"]),
-            int(meta["n_codes"]),
-            int(meta["n_cells"]),
-        )
-        if stored != (m, n_codes, n_cells):
-            raise ValueError(
-                f"IVF-PQ index at {path} was created with (m, n_codes,"
-                f" n_cells)={stored}; appending with"
-                f" {(m, n_codes, n_cells)} would encode incompatibly"
-            )
-        stored_opq = bool(meta["opq"]) if "opq" in meta.__fields__ else False
-        if stored_opq != opq:
-            raise ValueError(
-                f"IVF-PQ index at {path} was created with"
-                f" opq={stored_opq}; appending with opq={opq} would"
-                " encode in a different space (codes from the two"
-                " spaces are incomparable under one ADC LUT)"
-            )
-        fit_mean_qerr = float(meta["fit_mean_qerr"])
+    meta = store.open_frozen(
+        spark,
+        path,
+        IVFPQ,
+        "IVF-PQ",
+        {"m": m, "n_codes": n_codes, "n_cells": n_cells, "opq": opq},
+        "encode",
+        {"opq": lambda _: False},
+    )
+    if meta is not None:
+        centroids = _read_centroids(spark, path)
         books = _read_codebooks(spark, path, m, n_codes)
         R = _read_rotation(spark, path) if opq else None
     else:
@@ -1003,16 +983,9 @@ def ivfpq_index_append(
             books = pq_train_codebooks(
                 embeddings, m, n_codes, id_col=id_col, vec_col=vec_col
             )
-        fit_mean_qerr = None
-    try:
-        stored_schema = spark.read.parquet(f"{path}/rows").schema
-        embeddings = embeddings.select(
-            F.col(id_col).cast(stored_schema[id_col].dataType),
-            F.col(vec_col).cast(stored_schema[vec_col].dataType),
-        )
-    except AnalysisException:
-        pass  # first batch defines the types
-    src = embeddings.select(id_col, vec_col)
+    src = store.cast_to_stored(
+        spark, path, IVFPQ, embeddings, (id_col, vec_col)
+    )
     assigned = ivf_assign(src, centroids, vec_col)
     coded = (
         opq_encode(assigned, R, books, vec_col, err_col="qerr")
@@ -1024,72 +997,60 @@ def ivfpq_index_append(
         F.avg("qerr").alias("mean_qerr"),
     ).collect()[0]
     mean_qerr = float(stats["mean_qerr"] or 0.0)
-    if fit_mean_qerr is None:
-        # quantizer identity persists BEFORE any rows (crash
-        # ordering): meta first, centroids LAST — the centroids read
-        # above is the creation marker, so a crash between the writes
-        # leaves a tree the next append simply recreates, never rows
-        # under lost quantizers
+    if meta is None:
         fit_mean_qerr = mean_qerr
-        spark.createDataFrame(
-            [(m, n_codes, n_cells, fit_mean_qerr, opq)],
-            "m int, n_codes int, n_cells int, fit_mean_qerr double,"
-            " opq boolean",
-        ).coalesce(1).write.mode("overwrite").parquet(f"{path}/meta")
-        spark.createDataFrame(
-            [
-                (j, c, [float(x) for x in books[j][c]])
-                for j in range(m)
-                for c in range(n_codes)
-            ],
-            "sub_j int, code int, cs array<double>",
-        ).coalesce(1).write.mode("overwrite").parquet(f"{path}/codebooks")
+        frozen = {
+            "meta": spark.createDataFrame(
+                [(m, n_codes, n_cells, fit_mean_qerr, opq)],
+                "m int, n_codes int, n_cells int, fit_mean_qerr double,"
+                " opq boolean",
+            ),
+            "codebooks": spark.createDataFrame(
+                [
+                    (j, c, [float(x) for x in books[j][c]])
+                    for j in range(m)
+                    for c in range(n_codes)
+                ],
+                "sub_j int, code int, cs array<double>",
+            ),
+            "centroids": spark.createDataFrame(
+                [
+                    (i, [float(x) for x in row])
+                    for i, row in enumerate(centroids)
+                ],
+                "cell int, c array<double>",
+            ),
+        }
         if opq:
-            # rotation persists BEFORE centroids (the creation
-            # marker), so a crash can never leave a marked OPQ tree
-            # without its rotation
-            spark.createDataFrame(
+            frozen["rotation"] = spark.createDataFrame(
                 [(i, [float(x) for x in row]) for i, row in enumerate(R)],
                 "i int, r array<double>",
-            ).coalesce(1).write.mode("overwrite").parquet(
-                f"{path}/rotation"
             )
-        spark.createDataFrame(
-            [(i, [float(x) for x in row]) for i, row in enumerate(centroids)],
-            "cell int, c array<double>",
-        ).coalesce(1).write.mode("overwrite").parquet(f"{path}/centroids")
-    _drop_manifest_row(spark, f"{path}/rows_manifest", batch_id)
-    _drop_batch_dirs(spark, batch_id, f"{path}/rows")
-    _write_batch_keyed(
-        coded.select(
-            id_col, "pq_code", vec_col, "qerr", "ivf_cell"
-        ).withColumn("batch", F.lit(batch_id).cast("bigint")),
-        f"{path}/rows",
-        ("batch", "ivf_cell"),
+        store.persist_frozen(path, IVFPQ, frozen)
+    else:
+        fit_mean_qerr = float(meta["fit_mean_qerr"])
+    mm = store.append(
+        spark,
+        path,
+        IVFPQ,
+        batch_id,
+        {"rows": coded.select(id_col, "pq_code", vec_col, "qerr", "ivf_cell")},
+        coded,
+        id_col,
     )
     drift_ratio = mean_qerr / fit_mean_qerr if fit_mean_qerr > 0 else 1.0
-    _write_batch_keyed(
-        spark.createDataFrame(
-            [
-                (
-                    int(batch_id),
-                    int(stats["n_rows"]),
-                    mean_qerr,
-                    float(drift_ratio),
-                )
-            ],
-            "batch bigint, n_rows bigint, mean_qerr double,"
-            " drift_ratio double",
-        ),
-        f"{path}/drift",
-        ("batch",),
+    store.write_drift(
+        spark,
+        path,
+        batch_id,
+        n_rows=int(stats["n_rows"]),
+        mean_qerr=mean_qerr,
+        drift_ratio=float(drift_ratio),
     )
-    mm, n_rows = _manifest_from_agg(coded, id_col, batch_id)
-    _write_batch_keyed(mm, f"{path}/rows_manifest", ("batch",))
     coded.unpersist(blocking=False)
     return {
         "batch": int(batch_id),
-        "n_rows": n_rows,
+        "n_rows": mm["n"],
         "mean_qerr": mean_qerr,
         "drift_ratio": float(drift_ratio),
     }
@@ -1148,13 +1109,12 @@ def ivfpq_index_topk(
     ranking depends only on the re-ranked exact vector — ADC fold
     choice affects candidate selection (recall), never the returned
     distances."""
-    from .retrieval import _batches_disjoint
+    from .similarity import _read_centroids
 
     meta = spark.read.parquet(f"{index_path}/meta").collect()[0]
     m, n_codes = int(meta["m"]), int(meta["n_codes"])
     opq = bool(meta["opq"]) if "opq" in meta.__fields__ else False
-    crows = spark.read.parquet(f"{index_path}/centroids").orderBy("cell")
-    centroids = np.asarray([list(r["c"]) for r in crows.collect()])
+    centroids = _read_centroids(spark, index_path)
     books = _read_codebooks(spark, index_path, m, n_codes)
     q = np.asarray(query_vec, dtype=np.float64)
     cd2 = ((centroids - q[None, :]) ** 2).sum(axis=1)
@@ -1170,14 +1130,7 @@ def ivfpq_index_topk(
     lut = adc_lut(lut_q, books)
     rows = spark.read.parquet(f"{index_path}/rows")
     pruned = rows.where(F.col("ivf_cell").isin(probes))
-    fold = not _batches_disjoint(
-        spark,
-        f"{index_path}/rows",
-        f"{index_path}/rows_manifest",
-        "min_id",
-        "max_id",
-        "n_rows",
-    )
+    fold = not store.batches_disjoint(spark, index_path, IVFPQ)
     codes = pruned.select(id_col, "pq_code", "batch")
     if fold:
         codes = codes.groupBy(id_col).agg(
@@ -1239,101 +1192,16 @@ def ivfpq_index_compact(spark, src_path: str, dst_path: str) -> str:
     ivf_cell would serve the vector from a partition the probe
     never prunes to. Crash contract:
     :func:`..sources.writers.publish_version`."""
-    from ..sources.writers import publish_version
-
-    from .similarity import _fs_exists
-
-    meta = spark.read.parquet(f"{src_path}/meta")
-    centroids = spark.read.parquet(f"{src_path}/centroids")
-    codebooks = spark.read.parquet(f"{src_path}/codebooks")
-    rotation = (
-        spark.read.parquet(f"{src_path}/rotation")
-        if _fs_exists(spark, f"{src_path}/rotation")
-        else None
+    fit = float(
+        spark.read.parquet(f"{src_path}/meta").collect()[0]["fit_mean_qerr"]
     )
-
-    def build(vdir: str) -> None:
-        meta.coalesce(1).write.mode("overwrite").parquet(f"{vdir}/meta")
-        codebooks.coalesce(1).write.mode("overwrite").parquet(
-            f"{vdir}/codebooks"
-        )
-        if rotation is not None:
-            rotation.coalesce(1).write.mode("overwrite").parquet(
-                f"{vdir}/rotation"
-            )
-        centroids.coalesce(1).write.mode("overwrite").parquet(
-            f"{vdir}/centroids"
-        )
-        rows = spark.read.parquet(f"{src_path}/rows")
-        id_col = [
-            f.name
-            for f in rows.schema.fields
-            if f.name not in ("ivf_cell", "batch")
-            and "array" not in f.dataType.simpleString()
-        ][0]
-        vec_col = [
-            f.name
-            for f in rows.schema.fields
-            if "array" in f.dataType.simpleString()
-            and f.name != "pq_code"
-        ][0]
-        (
-            rows.groupBy(id_col)
-            .agg(
-                F.max_by(
-                    F.struct("pq_code", vec_col, "qerr", "ivf_cell"),
-                    "batch",
-                ).alias("w")
-            )
-            .select(
-                F.col(id_col),
-                F.col("w.pq_code").alias("pq_code"),
-                F.col(f"w.{vec_col}").alias(vec_col),
-                F.col("w.qerr").alias("qerr"),
-                F.lit(0).cast("bigint").alias("batch"),
-                F.col("w.ivf_cell").alias("ivf_cell"),
-            )
-            .write.mode("overwrite")
-            .partitionBy("batch", "ivf_cell")
-            .parquet(f"{vdir}/rows")
-        )
-        folded = spark.read.parquet(f"{vdir}/rows")
-        st = folded.agg(
-            F.min(F.col(id_col)).alias("min_id"),
-            F.max(F.col(id_col)).alias("max_id"),
-            F.count(F.lit(1)).cast("bigint").alias("n_rows"),
-            F.avg("qerr").alias("mean_qerr"),
-        ).collect()[0]
-        fit = float(meta.collect()[0]["fit_mean_qerr"])
-        mq = float(st["mean_qerr"] or 0.0)
-        # folded batch-0 drift row so post-compaction appends keep
-        # the drift protocol working (the ivf_index_compact shape)
-        spark.createDataFrame(
-            [(0, int(st["n_rows"]), mq, mq / fit if fit > 0 else 1.0)],
-            "batch bigint, n_rows bigint, mean_qerr double,"
-            " drift_ratio double",
-        ).write.mode("overwrite").partitionBy("batch").parquet(
-            f"{vdir}/drift"
-        )
-        # agg-then-withColumn (the _sq8_write_manifest discipline):
-        # a positional tuple would misalign against the read-back
-        # schema's trailing batch partition column
-        spark.createDataFrame(
-            [
-                (
-                    st["min_id"],
-                    st["max_id"],
-                    int(st["n_rows"]),
-                )
-            ],
-            f"min_id {folded.schema[id_col].dataType.simpleString()},"
-            f" max_id {folded.schema[id_col].dataType.simpleString()},"
-            " n_rows bigint",
-        ).withColumn("batch", F.lit(0).cast("bigint")).write.mode(
-            "overwrite"
-        ).partitionBy("batch").parquet(f"{vdir}/rows_manifest")
-
-    return publish_version(spark, dst_path, build)
+    return store.compact(
+        spark,
+        src_path,
+        dst_path,
+        IVFPQ,
+        extra=store.fold_drift(spark, fit, "qerr", "mean_qerr"),
+    )
 
 
 def ivfpq_drift_report(
@@ -1355,24 +1223,12 @@ def ivfpq_drift_report(
     ``refit_threshold ×`` the creation batch's — a RECALL alert, not
     a correctness gate (the probe's exact re-rank keeps returned
     distances true while coarse candidate quality drifts)."""
-    from pyspark.errors import AnalysisException
-
-    if live not in ("full", "sample", "off"):
-        raise ValueError(f"unknown live mode {live!r}")
+    log = store.read_drift(spark, index_path, live)
     fit = float(
         spark.read.parquet(f"{index_path}/meta").collect()[0][
             "fit_mean_qerr"
         ]
     )
-    try:
-        log = [
-            r.asDict()
-            for r in spark.read.parquet(f"{index_path}/drift")
-            .orderBy("batch")
-            .collect()
-        ]
-    except AnalysisException:
-        log = []
     if live == "off":
         n = sum(int(r["n_rows"]) for r in log)
         mean_qerr = (
@@ -1419,20 +1275,8 @@ def ivfpq_index_refit(
     n_cells = int(meta["n_cells"]) if n_cells is None else n_cells
     opq = bool(meta["opq"]) if "opq" in meta.__fields__ else False
     rows = spark.read.parquet(f"{src_path}/rows")
-    id_col = [
-        f.name
-        for f in rows.schema.fields
-        if f.name not in ("ivf_cell", "batch", "qerr")
-        and "array" not in f.dataType.simpleString()
-    ][0]
-    vec_col = [
-        f.name
-        for f in rows.schema.fields
-        if "array" in f.dataType.simpleString() and f.name != "pq_code"
-    ][0]
-    folded = rows.groupBy(id_col).agg(
-        F.max_by(vec_col, "batch").alias(vec_col)
-    )
+    id_col, _, vec_col = rows.columns[:3]
+    folded = store.latest_wins(rows.select(id_col, vec_col, "batch"), [id_col])
 
     def build(vdir: str) -> None:
         ivfpq_index_append(

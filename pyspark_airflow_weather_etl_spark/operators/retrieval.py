@@ -43,6 +43,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..caching import claim_group, persist_into
+from ..sources import indexstore as store
 from .dedup import spread_small_scan
 from .text import tokens
 
@@ -50,6 +51,42 @@ from .text import tokens
 #: md5(token) → 256 partitions, enough spread for any vocabulary while
 #: keeping the probe's IN-list tiny.
 _PFX_LEN = 2
+
+_POSTINGS_DDL = (
+    "token string, doc_id bigint, tf bigint, dl bigint, batch bigint,"
+    " pfx string"
+)
+_POSITIONS_DDL = (
+    "token string, doc_id bigint, pos bigint, batch bigint, pfx string"
+)
+
+
+def _distinct_docs(rows: DataFrame) -> DataFrame:
+    return rows.select("doc_id").dropna().distinct()
+
+
+#: BM25 layout: postings with dl denormalized, additive per-batch
+#: term-stats and corpus-scalar deltas, the optional doc-keyed forward
+#: index. Overlap strategy GUARD (+ REPAIR at compaction).
+BM25 = store.Layout(
+    subtrees=(
+        ("postings", ("batch", "pfx")),
+        ("termstats", ("batch",)),
+        ("stats", ("batch",)),
+        ("docterms", ("batch", "dpfx")),
+    ),
+    manifest=store.TEXT_MANIFEST,
+    schema=_POSTINGS_DDL,
+    per_id=_distinct_docs,
+)
+#: positional layout: one (token, doc_id, pos) row per occurrence.
+#: Overlap strategy REPAIR in-plan (a probe-side distinct).
+POSITIONAL = store.Layout(
+    subtrees=(("postings_pos", ("batch", "pfx")),),
+    manifest=store.TEXT_MANIFEST,
+    schema=_POSITIONS_DDL,
+    per_id=_distinct_docs,
+)
 
 
 class OverlappingBatchesError(RuntimeError):
@@ -97,18 +134,11 @@ def _bm25_overlap_guard(
         raise ValueError(f"unknown on_overlap {on_overlap!r}")
     if on_overlap == "ignore":
         return
-    if not _manifest_exists(spark, f"{index_path}/manifest"):
+    if not store.has_manifest(spark, index_path, BM25):
         return
-    # _batches_disjoint short-circuits True on <=1 live batches, so no
-    # separate _n_batches pre-check (one listStatus, not two)
-    if _batches_disjoint(
-        spark,
-        f"{index_path}/postings",
-        f"{index_path}/manifest",
-        "min_doc_id",
-        "max_doc_id",
-        "n_docs",
-    ):
+    # batches_disjoint short-circuits True on <=1 live batches, so no
+    # separate batch-count pre-check (one listStatus, not two)
+    if store.batches_disjoint(spark, index_path, BM25):
         return
     msg = (
         f"BM25 index at {index_path} has multiple batches whose"
@@ -330,30 +360,6 @@ def bm25_hard_negatives(
     return _rank_topk(neg, k)
 
 
-def _write_batch_keyed(df: DataFrame, out_path: str, partition_cols) -> None:
-    """Dynamic partition overwrite — replaces exactly the partitions
-    being written, so a crashed-and-replayed (or outright duplicated)
-    append of the same batch lands the identical bytes (the
-    streaming/lm_monitor batch-keyed idiom)."""
-    spark = df.sparkSession
-    old = spark.conf.get("spark.sql.sources.partitionOverwriteMode", None)
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        (
-            df.write.mode("overwrite")
-            .partitionBy(*partition_cols)
-            .parquet(out_path)
-        )
-    finally:
-        if old is not None:
-            spark.conf.set("spark.sql.sources.partitionOverwriteMode", old)
-        else:
-            # the key was unset before; leaving it set to dynamic would
-            # silently change later overwrite-partitionBy writes from
-            # full-tree replace to partial overwrite
-            spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
-
-
 def bm25_index_append(
     docs: DataFrame,
     path: str,
@@ -426,91 +432,37 @@ def bm25_index_append(
         .groupBy("token", "doc_id", "dl")
         .agg(F.count(F.lit(1)).cast("bigint").alias("tf")),
     )
-    batch = F.lit(batch_id).cast("bigint")
-    # fail-closed replay: manifest row first, then the batch dirs —
-    # a different-content replay must REPLACE, not merge (dynamic
-    # overwrite only swaps the pfx= leaves present in the new data)
-    _drop_manifest_row(docs.sparkSession, f"{path}/manifest", batch_id)
-    _drop_batch_dirs(
-        docs.sparkSession,
-        batch_id,
-        f"{path}/postings",
-        f"{path}/termstats",
-        f"{path}/stats",
-        f"{path}/docterms",
-    )
-    _write_batch_keyed(
-        tf.withColumn("batch", batch).withColumn(
+    spark = docs.sparkSession
+    subtrees = {
+        "postings": tf.withColumn(
             "pfx", F.substring(F.md5("token"), 1, _PFX_LEN)
         ),
-        f"{path}/postings",
-        ("batch", "pfx"),
-    )
-    _write_batch_keyed(
-        tf.groupBy("token")
-        .agg(F.count(F.lit(1)).cast("bigint").alias("df"))
-        .withColumn("batch", batch),
-        f"{path}/termstats",
-        ("batch",),
-    )
-    _write_batch_keyed(
-        tok.agg(
+        "termstats": tf.groupBy("token").agg(
+            F.count(F.lit(1)).cast("bigint").alias("df")
+        ),
+        "stats": tok.agg(
             F.count(F.lit(1)).cast("bigint").alias("n_docs"),
             F.sum(F.array_size("t")).cast("bigint").alias("sum_dl"),
-        ).withColumn("batch", batch),
-        f"{path}/stats",
-        ("batch",),
-    )
+        ),
+    }
     if forward_index:
-        _write_batch_keyed(
-            tf.select("doc_id", "token")
-            .withColumn("batch", batch)
-            .withColumn(
-                "dpfx",
-                F.substring(
-                    F.md5(F.col("doc_id").cast("string")), 1, _PFX_LEN
-                ),
-            ),
-            f"{path}/docterms",
-            ("batch", "dpfx"),
+        subtrees["docterms"] = tf.select("doc_id", "token").withColumn(
+            "dpfx",
+            F.substring(F.md5(F.col("doc_id").cast("string")), 1, _PFX_LEN),
         )
-    mm = tok.agg(
-        F.min(F.col("doc_id").cast("bigint")).alias("min_doc_id"),
-        F.max(F.col("doc_id").cast("bigint")).alias("max_doc_id"),
-        F.count(F.lit(1)).cast("bigint").alias("n_docs"),
-    ).collect()[0]
+    # replaying with forward_index=False still drops this batch's
+    # docterms: the store replaces every layout subtree
+    mm = store.append(spark, path, BM25, batch_id, subtrees, tok, "doc_id")
     for c in caches:
         c.unpersist()
-    lo = int(mm["min_doc_id"]) if mm["n_docs"] else 0
-    hi = int(mm["max_doc_id"]) if mm["n_docs"] else -1
-    from pyspark.errors import AnalysisException
-
-    spark = docs.sparkSession
-    maybe_overlap = False
-    try:
-        others = [
-            r
-            for r in spark.read.parquet(f"{path}/manifest").collect()
-            if int(r["batch"]) != int(batch_id) and int(r["n_docs"]) > 0
-        ]
-        maybe_overlap = mm["n_docs"] > 0 and any(
-            lo <= int(r["max_doc_id"]) and int(r["min_doc_id"]) <= hi
-            for r in others
-        )
-    except AnalysisException:
-        pass  # first append / pre-manifest tree
-    _write_batch_keyed(
-        spark.createDataFrame(
-            [(int(batch_id), lo, hi, int(mm["n_docs"]))],
-            "batch bigint, min_doc_id bigint, max_doc_id bigint,"
-            " n_docs bigint",
-        ),
-        f"{path}/manifest",
-        ("batch",),
+    maybe_overlap = mm["n"] > 0 and any(
+        mm["lo"] <= int(r["max_doc_id"]) and int(r["min_doc_id"]) <= mm["hi"]
+        for r in store.manifest_rows(spark, path, BM25)
+        if int(r["batch"]) != int(batch_id) and int(r["n_docs"]) > 0
     )
     return {
         "batch": int(batch_id),
-        "n_docs": int(mm["n_docs"]),
+        "n_docs": mm["n"],
         "maybe_overlap": maybe_overlap,
     }
 
@@ -582,10 +534,7 @@ def _scores_at_rest(
     # the positional twin's test) — and pinning the schema skips the
     # inference pass entirely
     postings = (
-        spark.read.schema(
-            "token string, doc_id bigint, tf bigint, dl bigint,"
-            " batch bigint, pfx string"
-        )
+        spark.read.schema(_POSTINGS_DDL)
         .parquet(f"{index_path}/postings")
         .where(F.col("pfx").isin(pfxs) & F.col("token").isin(terms))
         .select("token", "doc_id", "tf", "dl")
@@ -722,6 +671,12 @@ def bm25_prf_expand_at_rest(
     return _rank_topk(total, k)
 
 
+def _id_type(docs: DataFrame, id_col: str) -> str:
+    """DDL type of the corpus's id column — what the non-empty result
+    carries, so an empty-input result types identically."""
+    return docs.schema[id_col].dataType.simpleString()
+
+
 def phrase_counts(
     docs: DataFrame,
     phrases: list[tuple[int, str]],
@@ -760,7 +715,9 @@ def phrase_counts(
         # map_from_arrays(array(), array()) — VOID-typed, fails
         # analysis. Pre-r16 behavior: an empty result frame.
         return spark.createDataFrame(
-            [], "phrase_id bigint, doc_id bigint, n_matches bigint"
+            [],
+            f"phrase_id bigint, doc_id {_id_type(docs, id_col)},"
+            " n_matches bigint",
         )
     # split(" ") never returns an empty array (an empty string
     # tokenizes to [""]), so every phrase has a leading token
@@ -839,7 +796,6 @@ def positional_index_append(
     single-batch ones). Overlapping ranges or a missing manifest fall
     back to the dedup — the marker is a pure fast-path, never a
     correctness assumption."""
-    spark = docs.sparkSession
     t = docs.select(F.col(id_col).alias("doc_id"), tokens(text_col).alias("t"))
     posted = t.select(
         "doc_id", F.posexplode("t").alias("pos", "token")
@@ -847,34 +803,16 @@ def positional_index_append(
         "token",
         "doc_id",
         (F.col("pos") + 1).cast("bigint").alias("pos"),
-        F.lit(batch_id).cast("bigint").alias("batch"),
         F.substring(F.md5("token"), 1, _PFX_LEN).alias("pfx"),
     )
-    # fail-closed replay: manifest row first, then the batch dir —
-    # a different-content replay must replace the pfx= leaves too
-    _drop_manifest_row(spark, f"{path}/manifest", batch_id)
-    _drop_batch_dirs(spark, batch_id, f"{path}/postings_pos")
-    _write_batch_keyed(posted, f"{path}/postings_pos", ("batch", "pfx"))
-    mm = t.agg(
-        F.min(F.col("doc_id").cast("bigint")).alias("min_doc_id"),
-        F.max(F.col("doc_id").cast("bigint")).alias("max_doc_id"),
-        F.count(F.lit(1)).cast("bigint").alias("n_docs"),
-    ).collect()[0]
-    _write_batch_keyed(
-        spark.createDataFrame(
-            [
-                (
-                    int(batch_id),
-                    int(mm["min_doc_id"]) if mm["n_docs"] else 0,
-                    int(mm["max_doc_id"]) if mm["n_docs"] else -1,
-                    int(mm["n_docs"]),
-                )
-            ],
-            "batch bigint, min_doc_id bigint, max_doc_id bigint,"
-            " n_docs bigint",
-        ),
-        f"{path}/manifest",
-        ("batch",),
+    store.append(
+        docs.sparkSession,
+        path,
+        POSITIONAL,
+        batch_id,
+        {"postings_pos": posted},
+        t,
+        "doc_id",
     )
 
 
@@ -916,58 +854,20 @@ def positional_index_compact(
     previous version survives as rollback, and the SOURCE deltas are
     never touched (append cadence continues; the next compaction
     folds the new deltas)."""
-    from ..sources.writers import publish_version
-
-    def build(vdir: str) -> None:
-        src = spark.read.schema(
-            "token string, doc_id bigint, pos bigint, batch bigint,"
-            " pfx string"
-        ).parquet(f"{src_path}/postings_pos")
-        (
-            src.select(
-                "token",
-                "doc_id",
-                "pos",
-                F.lit(0).cast("bigint").alias("batch"),
-                "pfx",
-            )
-            # cross-batch duplicate postings (a re-delivered document)
-            # MUST fold away here: the compacted tree is single-batch,
-            # which is exactly the shape the probes' duplicate-dedup
-            # skip trusts to be duplicate-free — and positions are
-            # per-document facts, so the distinct is semantics-
-            # restoring, paid once at compaction instead of per probe
-            .dropDuplicates(["token", "doc_id", "pos"])
-            .write.mode("overwrite")
-            .partitionBy("batch", "pfx")
-            .parquet(f"{vdir}/postings_pos")
-        )
-        # fresh batch-0 manifest so appends AFTER this compaction can
-        # still prove disjointness against the folded history
-        mm = src.agg(
-            F.min("doc_id").alias("min_doc_id"),
-            F.max("doc_id").alias("max_doc_id"),
-            F.count_distinct(F.col("doc_id")).cast("bigint").alias("n_docs"),
-        ).collect()[0]
-        (
-            spark.createDataFrame(
-                [
-                    (
-                        0,
-                        int(mm["min_doc_id"]) if mm["n_docs"] else 0,
-                        int(mm["max_doc_id"]) if mm["n_docs"] else -1,
-                        int(mm["n_docs"]),
-                    )
-                ],
-                "batch bigint, min_doc_id bigint, max_doc_id bigint,"
-                " n_docs bigint",
-            )
-            .write.mode("overwrite")
-            .partitionBy("batch")
-            .parquet(f"{vdir}/manifest")
-        )
-
-    return publish_version(spark, dst_path, build)
+    # cross-batch duplicate postings (a re-delivered document) MUST
+    # fold away: the compacted tree is single-batch, exactly the shape
+    # the probes' dedup skip trusts to be duplicate-free — positions
+    # are per-document facts, so the distinct is semantics-restoring,
+    # paid once here instead of per probe
+    return store.compact(
+        spark,
+        src_path,
+        dst_path,
+        POSITIONAL,
+        fold=lambda rows: rows.drop("batch").dropDuplicates(
+            ["token", "doc_id", "pos"]
+        ),
+    )
 
 
 #: query-set size above which the at-rest phrase/NEAR probes switch
@@ -984,139 +884,6 @@ def positional_index_compact(
 _SET_STRATEGY_MIN = 9
 
 
-def _batch_ids(spark: SparkSession, path: str) -> list[int]:
-    """The ``batch=`` delta partition ids under an index subtree —
-    one driver-side listStatus (the compaction_cost_model pattern)."""
-    jvm = spark._jvm
-    hconf = spark._jsc.hadoopConfiguration()
-    root = jvm.org.apache.hadoop.fs.Path(path)
-    fs = root.getFileSystem(hconf)
-    return [
-        int(st.getPath().getName()[len("batch="):])
-        for st in fs.listStatus(root)
-        if st.isDirectory() and st.getPath().getName().startswith("batch=")
-    ]
-
-
-def _batches_disjoint(
-    spark: SparkSession,
-    tree_path: str,
-    manifest_path: str,
-    min_col: str,
-    max_col: str,
-    n_col: str,
-) -> bool:
-    """Whether a batch-keyed delta tree's per-batch id ranges are
-    PAIRWISE DISJOINT according to its manifest — the proof that no
-    id landed under two batches, so id-keyed dedup/fold passes can be
-    skipped. Any live batch missing from the manifest (a pre-manifest
-    tree) or any range overlap returns False: the manifest is a
-    fast-path marker, never a correctness input. Ranges compare in
-    the id column's OWN type (numeric ids as numbers, string ids
-    lexicographically) — a shared id sits inside both batches' ranges
-    under any total order, so disjoint ranges exclude it either way.
-    Driver cost is one listStatus plus a batches-sized parquet
-    read."""
-    from pyspark.errors import AnalysisException
-
-    live = _batch_ids(spark, tree_path)
-    if len(live) <= 1:
-        return True
-    try:
-        rows = spark.read.parquet(manifest_path).collect()
-    except AnalysisException:
-        return False
-    by_batch = {int(r["batch"]): r for r in rows}
-    if not set(live) <= set(by_batch):
-        return False  # some delta predates the manifest: assume overlap
-    ranges = sorted(
-        (by_batch[b][min_col], by_batch[b][max_col])
-        for b in live
-        if int(by_batch[b][n_col]) > 0
-    )
-    return all(
-        ranges[i][0] > ranges[i - 1][1] for i in range(1, len(ranges))
-    )
-
-
-def _manifest_exists(spark: SparkSession, manifest_path: str) -> bool:
-    """Whether a batch manifest tree exists at all — distinguishes
-    'no overlap report available' (pre-manifest trees keep historical
-    behavior) from 'manifest says maybe-overlap'."""
-    jvm = spark._jvm
-    p = jvm.org.apache.hadoop.fs.Path(manifest_path)
-    fs = p.getFileSystem(spark._jsc.hadoopConfiguration())
-    return bool(fs.exists(p))
-
-
-def _drop_manifest_row(
-    spark: SparkSession, manifest_path: str, batch_id: int
-) -> None:
-    """Invalidate one batch's manifest row BEFORE its rows are
-    rewritten (ADVICE r14): appends write rows first and the manifest
-    after, so a batch RE-delivered with a different id range whose
-    job crashes between the two writes would otherwise leave the
-    STALE range on record — possibly 'proving' batches disjoint over
-    rows that now overlap. Deleting the row first fails closed: an
-    interrupted replay yields 'live batch missing from manifest', so
-    :func:`_batches_disjoint` returns False and every consumer runs
-    its fold/dedup/guard until the append is replayed to completion.
-    No-op when the row (or the manifest tree) does not exist yet.
-
-    Callers pair this with :func:`_drop_batch_dirs` — the manifest
-    row alone is not enough for a replay that COMPLETES with a
-    different id set (see there)."""
-    _drop_batch_dirs(spark, batch_id, manifest_path)
-
-
-def _drop_batch_dirs(
-    spark: SparkSession, batch_id: int, *tree_paths: str
-) -> None:
-    """Delete each tree's ``batch=<id>`` directory before an append
-    rewrites that batch (round-15 review): dynamic partition
-    overwrite replaces only the LEAF partitions present in the new
-    data, so on a multi-level layout (``batch=/pfx=``,
-    ``batch=/ivf_cell=``, ``batch=/t=/bucket=``) a batch re-delivered
-    with a DIFFERENT id/content set would keep its old rows in the
-    sub-partitions the new delivery doesn't touch — alongside a fresh
-    manifest row whose range then falsely 'proves' the stale rows
-    away. Deleting the whole batch dir first makes a completed replay
-    a true replacement (and covers the empty-re-delivery edge on
-    single-level trees, where a zero-row write replaces nothing).
-    Ordering contract: callers drop the manifest row FIRST, then the
-    row dirs, then write rows, then the manifest — a crash anywhere
-    in that sequence leaves the batch missing from the manifest, so
-    :func:`_batches_disjoint` returns False and every consumer runs
-    its fold/dedup/guard. The honest width of the window (round-15
-    review): a crash BETWEEN the deletes and the rows write leaves
-    the batch's rows absent entirely until the feed replays it —
-    probes serve the index without that batch (loudly, with a read
-    error, if it was the only batch). That is the fail-closed trade
-    taken deliberately: the alternative (write first, diff-and-delete
-    stale leaves after) would serve SUPERSEDED rows through its crash
-    window and needs a leaf-diff the filesystem can't give atomically.
-    At-least-once delivery converges either way on replay.
-
-    No-op on paths that do not exist yet. A ``tree_paths`` entry
-    containing ``*`` is treated as a Hadoop glob (the semantic
-    index's cell-first ``rows/ivf_cell=*`` layout, where ``batch=``
-    is not the outermost level); all other paths are deleted
-    LITERALLY — globStatus would otherwise misread legitimate
-    ``[...]``/``{...}`` characters in a caller's path as pattern
-    syntax and silently skip (or over-match) the delete."""
-    jvm = spark._jvm
-    hconf = spark._jsc.hadoopConfiguration()
-    for tp in tree_paths:
-        p = jvm.org.apache.hadoop.fs.Path(f"{tp}/batch={int(batch_id)}")
-        fs = p.getFileSystem(hconf)
-        if "*" in tp:
-            matches = fs.globStatus(p)
-            for st in matches or []:
-                fs.delete(st.getPath(), True)
-        elif fs.exists(p):
-            fs.delete(p, True)
-
-
 def _require_docterms_coverage(spark: SparkSession, index_path: str) -> None:
     """Fail closed when any live document batch lacks its ``docterms``
     forward-index twin (round-16 review): ``bm25_index_append`` drops
@@ -1129,21 +896,13 @@ def _require_docterms_coverage(spark: SparkSession, index_path: str) -> None:
     subtree; live = manifest batches with ``n_docs > 0`` when a
     manifest exists (a zero-doc batch legitimately has no docterms
     dir), else every postings batch dir."""
-    from pyspark.errors import AnalysisException
-
-    live = set(_batch_ids(spark, f"{index_path}/postings"))
-    if _manifest_exists(spark, f"{index_path}/manifest"):
-        try:
-            rows = spark.read.parquet(f"{index_path}/manifest").collect()
-            nonempty = {
-                int(r["batch"]) for r in rows if int(r["n_docs"]) > 0
-            }
-            live &= nonempty
-        except AnalysisException:
-            pass
+    live = set(store.batch_ids(spark, f"{index_path}/postings"))
+    rows = store.manifest_rows(spark, index_path, BM25)
+    if rows:
+        live &= {int(r["batch"]) for r in rows if int(r["n_docs"]) > 0}
     covered = (
-        set(_batch_ids(spark, f"{index_path}/docterms"))
-        if _manifest_exists(spark, f"{index_path}/docterms")
+        set(store.batch_ids(spark, f"{index_path}/docterms"))
+        if store.exists(spark, f"{index_path}/docterms")
         else set()
     )
     missing = sorted(live - covered)
@@ -1162,17 +921,11 @@ def _pos_dedup_needed(spark: SparkSession, index_path: str) -> bool:
     pos) distinct. False in exactly two provably-duplicate-free
     shapes: a single-batch tree (one-shot build or freshly
     compacted), or a multi-batch tree whose per-batch ``manifest``
-    doc-id ranges are pairwise disjoint (:func:`_batches_disjoint` —
-    duplicates require the same doc_id under two batches, which
-    disjoint ranges exclude)."""
-    return not _batches_disjoint(
-        spark,
-        f"{index_path}/postings_pos",
-        f"{index_path}/manifest",
-        "min_doc_id",
-        "max_doc_id",
-        "n_docs",
-    )
+    doc-id ranges are pairwise disjoint
+    (:func:`..sources.indexstore.batches_disjoint` — duplicates
+    require the same doc_id under two batches, which disjoint ranges
+    exclude)."""
+    return not store.batches_disjoint(spark, index_path, POSITIONAL)
 
 
 def phrase_match_at_rest(
@@ -1230,10 +983,7 @@ def phrase_match_at_rest(
         }
     )
     postings = (
-        spark.read.schema(
-            "token string, doc_id bigint, pos bigint, batch bigint,"
-            " pfx string"
-        )
+        spark.read.schema(_POSITIONS_DDL)
         .parquet(f"{index_path}/postings_pos")
         .where(F.col("pfx").isin(pfxs) & F.col("token").isin(all_terms))
         .select("token", "doc_id", "pos")
@@ -1334,7 +1084,9 @@ def proximity_counts(
         # an empty pair list would fail analysis on the VOID-typed
         # empty map; pre-r16 behavior was an empty result frame.
         return spark.createDataFrame(
-            [], "pair_id bigint, doc_id bigint, n_pairs bigint"
+            [],
+            f"pair_id bigint, doc_id {_id_type(docs, id_col)},"
+            " n_pairs bigint",
         )
     all_terms = sorted({t for _, a, b in pairs for t in (a, b)})
 
@@ -1368,14 +1120,18 @@ def proximity_counts(
     w = F.lit(window)
 
     def _n_pairs(term_a: str, term_b: str):
-        pa = F.element_at("__tpos", F.lit(term_a))
-        pb = F.element_at("__tpos", F.lit(term_b))
+        # both position arrays are projected ONCE per row below the
+        # lambda (the settled HOF rule): an element_at inside the
+        # aggregate lambda would re-evaluate per element of pa
         return F.aggregate(
-            pa,
+            F.col(f"__p{all_terms.index(term_a)}"),
             F.lit(0).cast("bigint"),
             lambda acc, a: acc
             + F.size(
-                F.filter(pb, lambda b: (F.abs(b - a) <= w) & (b != a))
+                F.filter(
+                    F.col(f"__p{all_terms.index(term_b)}"),
+                    lambda b: (F.abs(b - a) <= w) & (b != a),
+                )
             ).cast("bigint"),
         )
 
@@ -1389,7 +1145,14 @@ def proximity_counts(
         ]
     )
     return (
-        base.select("doc_id", F.explode(per_pair).alias("__m"))
+        base.select(
+            "doc_id",
+            *[
+                F.element_at("__tpos", F.lit(t)).alias(f"__p{i}")
+                for i, t in enumerate(all_terms)
+            ],
+        )
+        .select("doc_id", F.explode(per_pair).alias("__m"))
         .select("__m.pair_id", "doc_id", "__m.n_pairs")
         .where(F.col("n_pairs") > 0)
     )
@@ -1431,10 +1194,7 @@ def proximity_match_at_rest(
         }
     )
     postings = (
-        spark.read.schema(
-            "token string, doc_id bigint, pos bigint, batch bigint,"
-            " pfx string"
-        )
+        spark.read.schema(_POSITIONS_DDL)
         .parquet(f"{index_path}/postings_pos")
         .where(F.col("pfx").isin(pfxs) & F.col("token").isin(all_terms))
         .select("token", "doc_id", "pos")
@@ -1905,165 +1665,73 @@ def bm25_index_compact(
     (``maybe_overlap`` ranges; provably-disjoint or pre-manifest
     trees keep the bit-identical additive fold); ``'always'`` /
     ``'never'`` force either arm."""
-    from ..sources.writers import publish_version
-
     if repair not in ("auto", "always", "never"):
         raise ValueError(f"unknown repair {repair!r}")
     do_repair = repair == "always" or (
         repair == "auto"
-        and not _batches_disjoint(
-            spark,
-            f"{src_path}/postings",
-            f"{src_path}/manifest",
-            "min_doc_id",
-            "max_doc_id",
-            "n_docs",
-        )
+        and not store.batches_disjoint(spark, src_path, BM25)
         # pre-manifest trees keep the historical additive fold: with
         # no manifest at all there is no overlap REPORT to act on
-        and _manifest_exists(spark, f"{src_path}/manifest")
+        and store.has_manifest(spark, src_path, BM25)
     )
 
-    def build(vdir: str) -> None:
-        raw = spark.read.schema(
-            "token string, doc_id bigint, tf bigint, dl bigint,"
-            " batch bigint, pfx string"
-        ).parquet(f"{src_path}/postings")
-        if do_repair:
-            latest = raw.groupBy("doc_id").agg(
-                F.max("batch").alias("batch")
-            )
-            kept = raw.join(latest, ["doc_id", "batch"])
-            postings = kept.select(
-                "token",
-                "doc_id",
-                "tf",
-                "dl",
-                F.lit(0).cast("bigint").alias("batch"),
-                "pfx",
-            )
-        else:
-            postings = raw.select(
-                "token",
-                "doc_id",
-                "tf",
-                "dl",
-                F.lit(0).cast("bigint").alias("batch"),
-                "pfx",
-            )
-        (
-            postings.write.mode("overwrite")
-            .partitionBy("batch", "pfx")
-            .parquet(f"{vdir}/postings")
+    def latest(df: DataFrame) -> DataFrame:
+        # multi-row-per-doc fold: keep every row of each doc's latest
+        # batch (a re-delivered doc replaces its whole token set)
+        if not do_repair:
+            return df
+        newest = df.groupBy("doc_id").agg(F.max("batch").alias("batch"))
+        return df.join(newest, ["doc_id", "batch"])
+
+    def src(name: str, ddl: str) -> DataFrame:
+        return spark.read.schema(f"{ddl}, batch bigint").parquet(
+            f"{src_path}/{name}"
         )
+
+    def rebuild(vdir: str, folded: DataFrame) -> dict:
         if do_repair:
             # statistics recomputed from the FOLDED postings — the
             # additive deltas still contain the superseded docs
-            folded = spark.read.schema(
-                "token string, doc_id bigint, tf bigint, dl bigint,"
-                " batch bigint, pfx string"
-            ).parquet(f"{vdir}/postings")
-            (
-                folded.groupBy("token")
-                .agg(F.count(F.lit(1)).cast("bigint").alias("df"))
-                .withColumn("batch", F.lit(0).cast("bigint"))
-                .write.mode("overwrite")
-                .partitionBy("batch")
-                .parquet(f"{vdir}/termstats")
-            )
-            (
-                folded.groupBy("doc_id")
+            out = {
+                "termstats": folded.groupBy("token").agg(
+                    F.count(F.lit(1)).cast("bigint").alias("df")
+                ),
+                "stats": folded.groupBy("doc_id")
                 .agg(F.first("dl").alias("dl"))
                 .agg(
                     F.count(F.lit(1)).cast("bigint").alias("n_docs"),
                     F.sum("dl").cast("bigint").alias("sum_dl"),
-                )
-                .withColumn("batch", F.lit(0).cast("bigint"))
-                .write.mode("overwrite")
-                .partitionBy("batch")
-                .parquet(f"{vdir}/stats")
-            )
+                ),
+            }
         else:
-            (
-                spark.read.schema("token string, df bigint, batch bigint")
-                .parquet(f"{src_path}/termstats")
+            out = {
+                "termstats": src("termstats", "token string, df bigint")
                 .groupBy("token")
-                .agg(F.sum("df").cast("bigint").alias("df"))
-                .withColumn("batch", F.lit(0).cast("bigint"))
-                .write.mode("overwrite")
-                .partitionBy("batch")
-                .parquet(f"{vdir}/termstats")
-            )
-            (
-                spark.read.schema(
-                    "n_docs bigint, sum_dl bigint, batch bigint"
-                )
-                .parquet(f"{src_path}/stats")
-                .agg(
+                .agg(F.sum("df").cast("bigint").alias("df")),
+                "stats": src("stats", "n_docs bigint, sum_dl bigint").agg(
                     F.sum("n_docs").cast("bigint").alias("n_docs"),
                     F.sum("sum_dl").cast("bigint").alias("sum_dl"),
-                )
-                .withColumn("batch", F.lit(0).cast("bigint"))
-                .write.mode("overwrite")
-                .partitionBy("batch")
-                .parquet(f"{vdir}/stats")
-            )
+                ),
+            }
         if forward_index:
-            dterms = spark.read.schema(
-                "doc_id bigint, token string, batch bigint, dpfx string"
-            ).parquet(f"{src_path}/docterms")
-            if do_repair:
-                dlatest = dterms.groupBy("doc_id").agg(
-                    F.max("batch").alias("batch")
-                )
-                dterms = dterms.join(dlatest, ["doc_id", "batch"])
-            (
-                dterms.select(
-                    "doc_id",
-                    "token",
-                    F.lit(0).cast("bigint").alias("batch"),
-                    "dpfx",
-                )
-                .write.mode("overwrite")
-                .partitionBy("batch", "dpfx")
-                .parquet(f"{vdir}/docterms")
+            docterms = src(
+                "docterms", "doc_id bigint, token string, dpfx string"
             )
-        # fresh batch-0 manifest (from the written postings) so
-        # post-compaction appends keep the overlap protocol working
-        mm = (
-            spark.read.schema(
-                "token string, doc_id bigint, tf bigint, dl bigint,"
-                " batch bigint, pfx string"
+            out["docterms"] = latest(docterms).select(
+                "doc_id", "token", "dpfx"
             )
-            .parquet(f"{vdir}/postings")
-            .agg(
-                F.min("doc_id").alias("min_doc_id"),
-                F.max("doc_id").alias("max_doc_id"),
-                F.count_distinct(F.col("doc_id"))
-                .cast("bigint")
-                .alias("n_docs"),
-            )
-            .collect()[0]
-        )
-        (
-            spark.createDataFrame(
-                [
-                    (
-                        0,
-                        int(mm["min_doc_id"]) if mm["n_docs"] else 0,
-                        int(mm["max_doc_id"]) if mm["n_docs"] else -1,
-                        int(mm["n_docs"]),
-                    )
-                ],
-                "batch bigint, min_doc_id bigint, max_doc_id bigint,"
-                " n_docs bigint",
-            )
-            .write.mode("overwrite")
-            .partitionBy("batch")
-            .parquet(f"{vdir}/manifest")
-        )
+        return out
 
-    return publish_version(spark, dst_path, build)
+    return store.compact(
+        spark,
+        src_path,
+        dst_path,
+        BM25,
+        fold=lambda raw: latest(raw).select(
+            "token", "doc_id", "tf", "dl", "pfx"
+        ),
+        extra=rebuild,
+    )
 
 
 def compaction_cost_model(
@@ -2097,20 +1765,13 @@ def compaction_cost_model(
     come from the deployment's own bench pair; the SHAPE (linear
     probe tax vs one-time rewrite) is what this encodes. Returns the
     decision plus every input so callers can log the why."""
+    from ..sources.writers import _hadoop_fs
+
     sub = {"bm25": "postings", "positional": "postings_pos",
            "sq8": "rows", "ivf": "rows", "srp": "rows"}[kind]
-    jvm = spark._jvm
-    hconf = spark._jsc.hadoopConfiguration()
-    root = jvm.org.apache.hadoop.fs.Path(f"{src_path.rstrip('/')}/{sub}")
-    fs = root.getFileSystem(hconf)
-    n_deltas = sum(
-        1
-        for st in fs.listStatus(root)
-        if st.isDirectory() and st.getPath().getName().startswith("batch=")
-    )
-    total_mb = fs.getContentSummary(
-        jvm.org.apache.hadoop.fs.Path(src_path)
-    ).getLength() / (1024.0 * 1024.0)
+    n_deltas = len(store.batch_ids(spark, f"{src_path.rstrip('/')}/{sub}"))
+    _, fs, root = _hadoop_fs(spark, src_path)
+    total_mb = fs.getContentSummary(root).getLength() / (1024.0 * 1024.0)
     savings = max(0, n_deltas - 1) * per_delta_sec * expected_probes
     cost = rewrite_floor_sec + total_mb / rewrite_mb_per_sec
     return {

@@ -27,8 +27,36 @@ from pyspark.sql import functions as F
 
 from ..caching import claim_group, persist_into
 from ..functions.vectors import cosine_similarity, dot, l2_norm, pair_dot_arrow
+from ..sources import indexstore as store
+from ..sources.writers import write_parquet_partitioned
 
 SEED = 42
+
+#: vector index layouts (``docs/overlap_contract.md``; every family's
+#: overlap strategy is FOLD latest-wins over the pruned probe slice).
+#: SQ8: (id, code, vec) rows under the frozen quantizer ``meta``.
+SQ8 = store.Layout(
+    subtrees=(("rows", ("batch",)),),
+    manifest=store.VECTOR_MANIFEST,
+    frozen=("meta",),
+)
+#: SRP: one (id, vec) row per (LSH table, vector) under t=/bucket=;
+#: the fold keeps one row per (id, table), the manifest counts the
+#: t=0 slice (one row per vector).
+SRP = store.Layout(
+    subtrees=(("rows", ("batch", "t", "bucket")),),
+    manifest=store.VECTOR_MANIFEST,
+    frozen=("meta",),
+    fold_by=("t",),
+    per_id=lambda rows: rows.where(F.col("t") == 0),
+)
+#: IVF and its fixed twin: rows under ivf_cell=, frozen centroids
+#: (the creation marker) after ``meta``.
+IVF = store.Layout(
+    subtrees=(("rows", ("batch", "ivf_cell")),),
+    manifest=store.VECTOR_MANIFEST,
+    frozen=("meta", "centroids"),
+)
 
 
 def brute_force_topk(
@@ -196,28 +224,26 @@ def sq8_index_append(
     vectors, only coarse RECALL degrades).
 
     Returns {"batch", "n_rows", "n_values", "clamped_frac"}."""
-    from pyspark.errors import AnalysisException
-
     spark = embeddings.sparkSession
-    try:
-        meta = spark.read.parquet(f"{path}/meta").collect()[0]
-        mn = [float(v) for v in meta["mn"]]
-        sc = [float(v) for v in meta["sc"]]
-        # normalize the incoming batch to the index's stored column
-        # types (one footer read): a crawl feed that switches float →
-        # double mid-stream would otherwise write a mixed-type parquet
-        # tree that FAILS at probe time with a column-convert error
-        stored = spark.read.parquet(f"{path}/rows").schema
-        embeddings = embeddings.select(
-            F.col(id_col).cast(stored[id_col].dataType),
-            F.col(vec_col).cast(stored[vec_col].dataType),
-        )
-    except AnalysisException:
+    meta = store.open_frozen(spark, path, SQ8, "SQ8")
+    if meta is None:
         d = len(embeddings.select(vec_col).first()[0])
         mn, sc = _sq8_params(embeddings, d, vec_col)
-        spark.createDataFrame(
-            [(mn, sc)], "mn array<double>, sc array<double>"
-        ).coalesce(1).write.mode("overwrite").parquet(f"{path}/meta")
+        store.persist_frozen(
+            path,
+            SQ8,
+            {
+                "meta": spark.createDataFrame(
+                    [(mn, sc)], "mn array<double>, sc array<double>"
+                )
+            },
+        )
+    else:
+        mn = [float(v) for v in meta["mn"]]
+        sc = [float(v) for v in meta["sc"]]
+    embeddings = store.cast_to_stored(
+        spark, path, SQ8, embeddings, (id_col, vec_col)
+    )
     raw = _sq8_unclamped(vec_col, mn, sc)
     guard = embeddings.agg(
         F.count(F.lit(1)).alias("n_rows"),
@@ -226,42 +252,20 @@ def sq8_index_append(
             F.size(F.filter(raw, lambda c: (c < 0) | (c > 255)))
         ).alias("n_clamped"),
     ).collect()[0]
-    from .retrieval import (
-        _drop_batch_dirs,
-        _drop_manifest_row,
-        _write_batch_keyed,
+    # per-batch id-range manifest: when every batch's vec_id range is
+    # pairwise disjoint — the append-only crawl common case — the
+    # at-rest probe skips its latest-wins fold entirely
+    codes = F.transform(
+        _sq8_codes(vec_col, mn, sc), lambda v: v.cast("smallint")
     )
-
-    # fail-closed replay: manifest row first, then the batch dir —
-    # also covers the empty-re-delivery edge (a zero-row dynamic
-    # overwrite replaces nothing)
-    _drop_manifest_row(spark, f"{path}/rows_manifest", batch_id)
-    _drop_batch_dirs(spark, batch_id, f"{path}/rows")
-    _write_batch_keyed(
-        embeddings.select(
-            F.col(id_col),
-            F.transform(
-                _sq8_codes(vec_col, mn, sc), lambda v: v.cast("smallint")
-            ).alias("code"),
-            F.col(vec_col),
-            F.lit(batch_id).cast("bigint").alias("batch"),
-        ),
-        f"{path}/rows",
-        ("batch",),
-    )
-    # per-batch id-range manifest (the positional_index_append marker
-    # applied to vectors): when every batch's vec_id range is pairwise
-    # disjoint — the append-only crawl common case — the at-rest probe
-    # skips its index-sized latest-wins fold entirely. Written as a
-    # direct agg so the id keeps its OWN column type across batches.
-    _write_batch_keyed(
-        embeddings.agg(
-            F.min(F.col(id_col)).alias("min_id"),
-            F.max(F.col(id_col)).alias("max_id"),
-            F.count(F.lit(1)).cast("bigint").alias("n_rows"),
-        ).withColumn("batch", F.lit(batch_id).cast("bigint")),
-        f"{path}/rows_manifest",
-        ("batch",),
+    store.append(
+        spark,
+        path,
+        SQ8,
+        batch_id,
+        {"rows": embeddings.select(id_col, codes.alias("code"), vec_col)},
+        embeddings,
+        id_col,
     )
     n_values = int(guard["n_values"] or 0)
     rep = {
@@ -273,25 +277,14 @@ def sq8_index_append(
         ),
     }
     # append-only drift log — sq8_drift_report's per-batch history for
-    # batch AND streaming pipelines alike (batch-keyed dynamic
-    # overwrite keeps a replayed batch from double-logging)
-    from .retrieval import _write_batch_keyed
-
-    _write_batch_keyed(
-        spark.createDataFrame(
-            [
-                (
-                    int(rep["batch"]),
-                    int(rep["n_rows"]),
-                    int(rep["n_values"]),
-                    float(rep["clamped_frac"]),
-                )
-            ],
-            "batch bigint, n_rows bigint, n_values bigint,"
-            " clamped_frac double",
-        ),
-        f"{path}/drift",
-        ("batch",),
+    # batch AND streaming pipelines alike
+    store.write_drift(
+        spark,
+        path,
+        batch_id,
+        n_rows=rep["n_rows"],
+        n_values=n_values,
+        clamped_frac=float(rep["clamped_frac"]),
     )
     return rep
 
@@ -340,22 +333,10 @@ def sq8_drift_report(
       vectors and the log is complete; :func:`sq8_drift_backfill`
       synthesizes the log for pre-log indexes).
     """
-    from pyspark.errors import AnalysisException
-
-    if live not in ("full", "sample", "off"):
-        raise ValueError(f"unknown live mode {live!r}")
+    log = store.read_drift(spark, index_path, live)
     meta = spark.read.parquet(f"{index_path}/meta").collect()[0]
     mn = [float(v) for v in meta["mn"]]
     sc = [float(v) for v in meta["sc"]]
-    try:
-        log = [
-            r.asDict()
-            for r in spark.read.parquet(f"{index_path}/drift")
-            .orderBy("batch")
-            .collect()
-        ]
-    except AnalysisException:
-        log = []
     stderr = None
     if live == "off":
         n_values = sum(int(r["n_values"]) for r in log)
@@ -412,8 +393,6 @@ def sq8_drift_backfill(spark, index_path: str) -> int:
     overwrites each batch's row with identical bytes). After this,
     ``sq8_drift_report(live='off')`` decides from the log alone.
     Returns the number of batch rows written."""
-    from .retrieval import _write_batch_keyed
-
     meta = spark.read.parquet(f"{index_path}/meta").collect()[0]
     mn = [float(v) for v in meta["mn"]]
     sc = [float(v) for v in meta["sc"]]
@@ -446,7 +425,7 @@ def sq8_drift_backfill(spark, index_path: str) -> int:
         )
     )
     n = per_batch.count()
-    _write_batch_keyed(per_batch, f"{index_path}/drift", ("batch",))
+    write_parquet_partitioned(per_batch, f"{index_path}/drift", ("batch",))
     return n
 
 
@@ -463,26 +442,24 @@ def sq8_index_refit(spark, src_path: str, dst_path: str) -> str:
     from ..sources.writers import publish_version
 
     rows = spark.read.parquet(f"{src_path}/rows")
-    id_col, vec_col = [
-        f.name
-        for f in rows.schema.fields
-        if f.name not in ("code", "batch")
-    ]
-    if "array" not in rows.schema[vec_col].dataType.simpleString():
-        id_col, vec_col = vec_col, id_col
+    id_col, _, vec_col = rows.columns[:3]
     # a vec_id re-delivered under a later batch= folds to its LATEST
     # vector BEFORE the refit trains — the output is single-batch,
     # which downstream probes trust to be duplicate-free (ADVICE r13)
-    rows = rows.groupBy(id_col).agg(
-        F.max_by(vec_col, "batch").alias(vec_col)
-    )
+    rows = store.latest_wins(rows.select(id_col, vec_col, "batch"), [id_col])
     d = len(rows.select(vec_col).first()[0])
     mn, sc = _sq8_params(rows, d, vec_col)
 
     def build(vdir: str) -> None:
-        spark.createDataFrame(
-            [(mn, sc)], "mn array<double>, sc array<double>"
-        ).coalesce(1).write.mode("overwrite").parquet(f"{vdir}/meta")
+        store.persist_frozen(
+            vdir,
+            SQ8,
+            {
+                "meta": spark.createDataFrame(
+                    [(mn, sc)], "mn array<double>, sc array<double>"
+                )
+            },
+        )
         (
             rows.select(
                 F.col(id_col),
@@ -497,7 +474,9 @@ def sq8_index_refit(spark, src_path: str, dst_path: str) -> str:
             .partitionBy("batch")
             .parquet(f"{vdir}/rows")
         )
-        _sq8_write_manifest(spark, vdir, id_col)
+        store.write_manifest(
+            spark, vdir, SQ8, 0, spark.read.parquet(f"{vdir}/rows"), id_col
+        )
 
     return publish_version(spark, dst_path, build)
 
@@ -513,59 +492,11 @@ def sq8_index_compact(spark, src_path: str, dst_path: str) -> str:
     quantizer ``meta`` is copied verbatim (it IS the index identity —
     recomputing it here would re-code nothing-at-rest). A vec_id
     re-delivered under a later ``batch=`` folds to its LATEST row
-    here (the :func:`positional_index_compact` duplicate-fold applied
-    to vectors — the compacted tree is single-batch, exactly the
-    shape :func:`sq8_topk_at_rest` trusts to be duplicate-free;
-    ADVICE round 13). Crash contract: publish_version (build in an
-    unreferenced v-dir, flip ``_current`` last, previous version is
-    rollback)."""
-    from ..sources.writers import publish_version
-
-    meta = spark.read.parquet(f"{src_path}/meta")
-
-    def build(vdir: str) -> None:
-        meta.coalesce(1).write.mode("overwrite").parquet(f"{vdir}/meta")
-        rows = spark.read.parquet(f"{src_path}/rows")
-        id_col = [
-            f.name
-            for f in rows.schema.fields
-            if f.name not in ("code", "batch")
-            and "array" not in f.dataType.simpleString()
-        ][0]
-        others = [
-            f.name for f in rows.schema.fields
-            if f.name not in (id_col, "batch")
-        ]
-        (
-            rows.groupBy(id_col)
-            .agg(*[F.max_by(c, "batch").alias(c) for c in others])
-            .withColumn("batch", F.lit(0).cast("bigint"))
-            .write.mode("overwrite")
-            .partitionBy("batch")
-            .parquet(f"{vdir}/rows")
-        )
-        _sq8_write_manifest(spark, vdir, id_col)
-
-    return publish_version(spark, dst_path, build)
-
-
-def _sq8_write_manifest(spark, vdir: str, id_col: str) -> None:
-    """Batch-0 ``rows_manifest`` for a freshly built single-batch SQ8
-    tree (compact/refit output) — a narrow id-column scan of the
-    just-written rows, so appends landing AFTER the rebuild can still
-    prove range disjointness against the folded history."""
-    (
-        spark.read.parquet(f"{vdir}/rows")
-        .agg(
-            F.min(F.col(id_col)).alias("min_id"),
-            F.max(F.col(id_col)).alias("max_id"),
-            F.count(F.lit(1)).cast("bigint").alias("n_rows"),
-        )
-        .withColumn("batch", F.lit(0).cast("bigint"))
-        .write.mode("overwrite")
-        .partitionBy("batch")
-        .parquet(f"{vdir}/rows_manifest")
-    )
+    here (the compacted tree is single-batch, exactly the shape
+    :func:`sq8_topk_at_rest` trusts to be duplicate-free; ADVICE
+    round 13). Crash contract: publish_version (via
+    :func:`..sources.indexstore.compact`)."""
+    return store.compact(spark, src_path, dst_path, SQ8)
 
 
 def sq8_index_write(
@@ -616,14 +547,12 @@ def sq8_topk_at_rest(
     function of the vector, so a re-delivered unchanged vector folds
     to identical bytes either way). The fold is PROVABLY skipped in
     two duplicate-free shapes (the
-    :func:`..operators.retrieval._batches_disjoint` logic):
+    :func:`..sources.indexstore.batches_disjoint` logic):
     single-batch trees — one-shot builds or freshly compacted/refit
     ones — and multi-batch trees whose per-append ``rows_manifest``
     id ranges are pairwise disjoint (the append-only crawl case), so
     the correctness fix costs nothing until a re-delivery actually
     overlaps."""
-    from .retrieval import _batches_disjoint
-
     meta = spark.read.parquet(f"{index_path}/meta").collect()[0]
     mn = [float(v) for v in meta["mn"]]
     sc = [float(v) for v in meta["sc"]]
@@ -643,16 +572,9 @@ def sq8_topk_at_rest(
     # pruning still holds: the coarse pass reads only (id, code[,
     # batch]), ReadSchema-asserted in tests/test_similarity.py.
     rows = spark.read.parquet(f"{index_path}/rows")
-    # _batches_disjoint short-circuits True on <=1 live batches, so no
-    # separate _n_batches pre-check (one listStatus, not two)
-    multi_batch = not _batches_disjoint(
-        spark,
-        f"{index_path}/rows",
-        f"{index_path}/rows_manifest",
-        "min_id",
-        "max_id",
-        "n_rows",
-    )
+    # batches_disjoint short-circuits True on <=1 live batches, so no
+    # separate batch-count pre-check (one listStatus, not two)
+    multi_batch = not store.batches_disjoint(spark, index_path, SQ8)
     qq_arr = F.array(*[F.lit(int(v)).cast("bigint") for v in qq])
     coarse_src = rows.select(id_col, "code")
     if multi_batch:
@@ -820,6 +742,13 @@ def _srp_table_structs(bits_per_table: int, n_tables: int) -> F.Column:
     )
 
 
+def _srp_kind(meta_row) -> str:
+    fields = meta_row.__fields__
+    if "kind" in fields:
+        return meta_row["kind"]
+    return "fixed" if "scale" in fields else "gaussian"
+
+
 def _srp_require_kind(meta_row, want: str, path: str) -> None:
     """Refuse to mix the two SRP quantizers (round-15 review): the
     Gaussian-plane lifecycle and the integer-plane fixed twin share
@@ -829,12 +758,7 @@ def _srp_require_kind(meta_row, want: str, path: str) -> None:
     never prunes to. Trees written before the marker existed carry a
     ``scale`` column exactly when they are fixed-twin trees, so kind
     is inferred for them."""
-    fields = meta_row.__fields__
-    kind = (
-        meta_row["kind"]
-        if "kind" in fields
-        else ("fixed" if "scale" in fields else "gaussian")
-    )
+    kind = _srp_kind(meta_row)
     if kind != want:
         raise ValueError(
             f"SRP index at {path} is a {kind!r}-quantizer tree; the"
@@ -968,28 +892,55 @@ def srp_topk_at_rest(
     return brute_force_topk(candidates, query_vec, k, id_col, vec_col)
 
 
-def _manifest_from_agg(src: DataFrame, id_col: str, batch_id: int):
-    """One-job per-batch ``rows_manifest``: aggregate the batch's id
-    range ONCE, collect the single row, and rebuild the manifest
-    frame from literals in the id column's OWN type (round-15 review:
-    writing the agg frame and then re-collecting it for the n_rows
-    return value was a second job over the same batch). Returns
-    ``(manifest_df, n_rows)``; an empty batch yields null min/max,
-    which :func:`..operators.retrieval._batches_disjoint` already
-    ignores via its ``n_rows > 0`` filter."""
-    spark = src.sparkSession
-    idt = src.schema[id_col].dataType.simpleString()
-    row = src.agg(
-        F.min(F.col(id_col)).alias("min_id"),
-        F.max(F.col(id_col)).alias("max_id"),
-        F.count(F.lit(1)).cast("bigint").alias("n_rows"),
-    ).collect()[0]
-    n = int(row["n_rows"])
-    df = spark.createDataFrame(
-        [(int(batch_id), row["min_id"], row["max_id"], n)],
-        f"batch bigint, min_id {idt}, max_id {idt}, n_rows bigint",
+def _srp_append(
+    embeddings: DataFrame,
+    path: str,
+    batch_id: int,
+    identity: dict,
+    id_col: str,
+    vec_col: str,
+    sign,
+) -> dict:
+    """The SRP append shared by both quantizer flavors: freeze the
+    plane ``identity`` (its ``kind`` included) in ``meta`` before any
+    rows, then land one row per (LSH table, vector) — ``sign(src)``
+    adds the packed ``srp_bucket`` signature."""
+    spark = embeddings.sparkSession
+    if (
+        store.open_frozen(
+            spark, path, SRP, "SRP", identity, "bucket", {"kind": _srp_kind}
+        )
+        is None
+    ):
+        ddl = ", ".join(
+            f"{k} {'string' if k == 'kind' else 'int'}" for k in identity
+        )
+        store.persist_frozen(
+            path,
+            SRP,
+            {"meta": spark.createDataFrame([tuple(identity.values())], ddl)},
+        )
+    src = store.cast_to_stored(
+        spark, path, SRP, embeddings, (id_col, vec_col)
+    ).persist()
+    tables = _srp_table_structs(
+        identity["bits_per_table"], identity["n_tables"]
     )
-    return df, n
+    mm = store.append(
+        spark,
+        path,
+        SRP,
+        batch_id,
+        {
+            "rows": sign(src)
+            .select(id_col, vec_col, F.explode(tables).alias("tb"))
+            .select(id_col, vec_col, "tb.t", "tb.bucket")
+        },
+        src,
+        id_col,
+    )
+    src.unpersist(blocking=False)
+    return {"batch": int(batch_id), "n_rows": mm["n"]}
 
 
 def srp_index_append(
@@ -1029,80 +980,45 @@ def srp_index_append(
     batch missing from the manifest and :func:`srp_index_topk` fails
     CLOSED into its latest-wins fold (ADVICE r14). Returns
     ``{"batch", "n_rows"}``."""
-    from pyspark.errors import AnalysisException
-
-    from .retrieval import (
-        _drop_batch_dirs,
-        _drop_manifest_row,
-        _write_batch_keyed,
-    )
-
     _srp_require_packable(bits_per_table, n_tables)
-    spark = embeddings.sparkSession
-    try:
-        meta = spark.read.parquet(f"{path}/meta").collect()[0]
-        _srp_require_kind(meta, "gaussian", path)
-        stored_params = (
-            int(meta["dim"]),
-            int(meta["bits_per_table"]),
-            int(meta["n_tables"]),
-        )
-        if stored_params != (dim, bits_per_table, n_tables):
-            raise ValueError(
-                f"SRP index at {path} was created with (dim,"
-                f" bits_per_table, n_tables)={stored_params}; appending"
-                f" with {(dim, bits_per_table, n_tables)} would bucket"
-                " incompatibly"
-            )
-    except AnalysisException:
-        # A tree with rows but no meta is a foreign/partial artifact
-        # (partial copy, manual meta deletion) — treating it as NEW
-        # would merge this batch under possibly different plane
-        # identity, exactly the mixed-parameter corruption the meta
-        # check exists to prevent (the ivf_index_append_fixed
-        # 'centroids but no meta' discipline; round-16 review).
-        if _fs_exists(spark, f"{path}/rows"):
-            raise ValueError(
-                f"SRP index at {path} has rows but no meta — its plane"
-                " identity (dim, bits_per_table, n_tables) is"
-                " unknowable; rebuild the index (the append would"
-                " otherwise bucket against unverifiable planes)"
-            )
-        # plane identity persists BEFORE any rows so a crash between
-        # the two never leaves rows probed under different planes
-        spark.createDataFrame(
-            [(dim, bits_per_table, n_tables, "gaussian")],
-            "dim int, bits_per_table int, n_tables int, kind string",
-        ).coalesce(1).write.mode("overwrite").parquet(f"{path}/meta")
-    try:
-        stored = spark.read.parquet(f"{path}/rows").schema
-        embeddings = embeddings.select(
-            F.col(id_col).cast(stored[id_col].dataType),
-            F.col(vec_col).cast(stored[vec_col].dataType),
-        )
-    except AnalysisException:
-        pass  # first batch defines the types
-    src = embeddings.select(id_col, vec_col).persist()
     n_planes = bits_per_table * n_tables
-    sig = srp_signature(src, dim, n_planes, vec_col)
-    tables = _srp_table_structs(bits_per_table, n_tables)
-    # fail-closed replay: manifest row first, then the batch dir — a
-    # different-content replay must replace the t=/bucket= leaves too
-    _drop_manifest_row(spark, f"{path}/rows_manifest", batch_id)
-    _drop_batch_dirs(spark, batch_id, f"{path}/rows")
-    _write_batch_keyed(
-        sig.select(
-            F.col(id_col), F.col(vec_col), F.explode(tables).alias("tb")
-        )
-        .select(id_col, vec_col, "tb.t", "tb.bucket")
-        .withColumn("batch", F.lit(batch_id).cast("bigint")),
-        f"{path}/rows",
-        ("batch", "t", "bucket"),
+    return _srp_append(
+        embeddings,
+        path,
+        batch_id,
+        {
+            "dim": dim,
+            "bits_per_table": bits_per_table,
+            "n_tables": n_tables,
+            "kind": "gaussian",
+        },
+        id_col,
+        vec_col,
+        lambda src: srp_signature(src, dim, n_planes, vec_col),
     )
-    mm, n_rows = _manifest_from_agg(src, id_col, batch_id)
-    _write_batch_keyed(mm, f"{path}/rows_manifest", ("batch",))
-    src.unpersist(blocking=False)
-    return {"batch": int(batch_id), "n_rows": n_rows}
+
+
+def _srp_index_probe(
+    spark, index_path: str, meta, qbits: int, query_vec, k, id_col, vec_col
+) -> DataFrame:
+    """The (t, bucket)-pruned candidate read, fold and exact re-rank
+    shared by both SRP lifecycle probes."""
+    rows = spark.read.parquet(f"{index_path}/rows")
+    cond = _srp_query_cond(
+        qbits, int(meta["bits_per_table"]), int(meta["n_tables"])
+    )
+    candidates = rows.where(cond).select(id_col, vec_col, "batch")
+    # batches_disjoint short-circuits True on <=1 live batches, so no
+    # separate batch-count pre-check (one listStatus, not two)
+    if not store.batches_disjoint(spark, index_path, SRP):
+        candidates = candidates.groupBy(id_col).agg(
+            F.max_by(vec_col, "batch").alias(vec_col)
+        )
+    else:
+        candidates = candidates.dropDuplicates([id_col])
+    return brute_force_topk(
+        candidates.select(id_col, vec_col), query_vec, k, id_col, vec_col
+    )
 
 
 def srp_index_topk(
@@ -1126,34 +1042,15 @@ def srp_index_topk(
     ``rows_manifest`` proves the batches' id ranges pairwise
     disjoint, where a plain per-id dropDuplicates suffices; either
     pass runs over the PRUNED probe slice only, never the index."""
-    from .retrieval import _batches_disjoint
-
     meta = spark.read.parquet(f"{index_path}/meta").collect()[0]
     _srp_require_kind(meta, "gaussian", index_path)
-    dim = int(meta["dim"])
-    bits_per_table = int(meta["bits_per_table"])
-    n_tables = int(meta["n_tables"])
-    qbits = _srp_query_bits(query_vec, dim, bits_per_table * n_tables)
-    rows = spark.read.parquet(f"{index_path}/rows")
-    cond = _srp_query_cond(qbits, bits_per_table, n_tables)
-    candidates = rows.where(cond).select(id_col, vec_col, "batch")
-    # _batches_disjoint short-circuits True on <=1 live batches, so no
-    # separate _n_batches pre-check (one listStatus, not two)
-    if not _batches_disjoint(
-        spark,
-        f"{index_path}/rows",
-        f"{index_path}/rows_manifest",
-        "min_id",
-        "max_id",
-        "n_rows",
-    ):
-        candidates = candidates.groupBy(id_col).agg(
-            F.max_by(vec_col, "batch").alias(vec_col)
-        )
-    else:
-        candidates = candidates.dropDuplicates([id_col])
-    return brute_force_topk(
-        candidates.select(id_col, vec_col), query_vec, k, id_col, vec_col
+    qbits = _srp_query_bits(
+        query_vec,
+        int(meta["dim"]),
+        int(meta["bits_per_table"]) * int(meta["n_tables"]),
+    )
+    return _srp_index_probe(
+        spark, index_path, meta, qbits, query_vec, k, id_col, vec_col
     )
 
 
@@ -1163,77 +1060,17 @@ def srp_index_compact(spark, src_path: str, dst_path: str) -> str:
     :func:`ivf_index_compact` economics: signatures are per-vector
     facts under the frozen plane identity, so compaction folds
     re-delivered ids to their latest row PER TABLE (bucket follows
-    the winning vector — both are functions of the same row) and
-    re-partitions; probe results identical by construction. The
+    the winning vector — ONE max_by over the row, so vector and
+    bucket always come from the same winning row, round-16 review)
+    and re-partitions; probe results identical by construction. The
     rebuilt batch-0 ``rows_manifest`` counts VECTORS (one manifest
-    row per id, not per L-copy), written agg-then-withColumn so the
-    post-compaction disjoint fast path engages (the ADVICE-r14
-    ivf_index_compact lesson). Layout-driven, so
+    row per id, not per L-copy — the t=0 slice) so the
+    post-compaction disjoint fast path engages. Layout-driven, so
     :func:`srp_index_append_fixed` trees compact through this same
     path (meta — including the fixed twin's scale — is copied
     verbatim; probe-identity pytest). Crash contract:
     publish_version."""
-    from .retrieval import _write_batch_keyed
-    from ..sources.writers import publish_version
-
-    meta = spark.read.parquet(f"{src_path}/meta")
-
-    def build(vdir: str) -> None:
-        meta.coalesce(1).write.mode("overwrite").parquet(f"{vdir}/meta")
-        rows = spark.read.parquet(f"{src_path}/rows")
-        id_col = [
-            f.name
-            for f in rows.schema.fields
-            if f.name not in ("t", "bucket", "batch")
-            and "array" not in f.dataType.simpleString()
-        ][0]
-        vec_col = [
-            f.name
-            for f in rows.schema.fields
-            if "array" in f.dataType.simpleString()
-        ][0]
-        # ONE max_by over a (vec, bucket) struct, not two independent
-        # ones (round-16 review): with duplicate rows for the same
-        # (id, t) inside one batch, two max_by calls could each pick a
-        # DIFFERENT duplicate on the batch tie, persisting a bucket
-        # inconsistent with the stored vector — later probes would
-        # then prune that vector into the wrong (t, bucket) partition.
-        # Folding the struct guarantees vector and bucket always come
-        # from the same winning row.
-        (
-            rows.groupBy(id_col, "t")
-            .agg(
-                F.max_by(F.struct(vec_col, "bucket"), "batch").alias("w")
-            )
-            .withColumn("batch", F.lit(0).cast("bigint"))
-            .select(
-                id_col,
-                F.col(f"w.{vec_col}").alias(vec_col),
-                "batch",
-                "t",
-                F.col("w.bucket").alias("bucket"),
-            )
-            .write.mode("overwrite")
-            .partitionBy("batch", "t", "bucket")
-            .parquet(f"{vdir}/rows")
-        )
-        # vector-count manifest from the t=0 slice (each vector has
-        # exactly one row per table — partition-pruned single-table
-        # scan instead of an index-wide countDistinct)
-        _write_batch_keyed(
-            spark.read.parquet(f"{vdir}/rows")
-            .where(F.col("t") == 0)
-            .agg(
-                F.min(F.col(id_col)).alias("min_id"),
-                F.max(F.col(id_col)).alias("max_id"),
-                F.count(F.lit(1)).cast("bigint").alias("n_rows"),
-            )
-            .withColumn("batch", F.lit(0).cast("bigint")),
-            f"{vdir}/rows_manifest",
-            ("batch",),
-        )
-
-    return publish_version(spark, dst_path, build)
+    return store.compact(spark, src_path, dst_path, SRP)
 
 
 def _srp_fixed_planes(n_planes: int, dim: int):
@@ -1312,74 +1149,25 @@ def srp_index_append_fixed(
     ``(dim, bits_per_table, n_tables, scale)``, persisted to ``meta``
     before any rows; mismatched appends raise. Returns
     ``{"batch", "n_rows"}``."""
-    from pyspark.errors import AnalysisException
-
-    from .retrieval import (
-        _drop_batch_dirs,
-        _drop_manifest_row,
-        _write_batch_keyed,
-    )
-
     _srp_require_packable(bits_per_table, n_tables)
-    spark = embeddings.sparkSession
-    try:
-        meta = spark.read.parquet(f"{path}/meta").collect()[0]
-        _srp_require_kind(meta, "fixed", path)
-        stored = (
-            int(meta["dim"]),
-            int(meta["bits_per_table"]),
-            int(meta["n_tables"]),
-            int(meta["scale"]),
-        )
-        if stored != (dim, bits_per_table, n_tables, scale):
-            raise ValueError(
-                f"fixed SRP index at {path} was created with (dim,"
-                f" bits_per_table, n_tables, scale)={stored}; appending"
-                f" with {(dim, bits_per_table, n_tables, scale)} would"
-                " bucket incompatibly"
-            )
-    except AnalysisException:
-        # rows without meta: foreign/partial artifact — refuse, like
-        # the gaussian append (round-16 review)
-        if _fs_exists(spark, f"{path}/rows"):
-            raise ValueError(
-                f"fixed SRP index at {path} has rows but no meta — its"
-                " plane identity (dim, bits_per_table, n_tables,"
-                " scale) is unknowable; rebuild the index"
-            )
-        spark.createDataFrame(
-            [(dim, bits_per_table, n_tables, scale, "fixed")],
-            "dim int, bits_per_table int, n_tables int, scale int,"
-            " kind string",
-        ).coalesce(1).write.mode("overwrite").parquet(f"{path}/meta")
-    try:
-        stored_schema = spark.read.parquet(f"{path}/rows").schema
-        embeddings = embeddings.select(
-            F.col(id_col).cast(stored_schema[id_col].dataType),
-            F.col(vec_col).cast(stored_schema[vec_col].dataType),
-        )
-    except AnalysisException:
-        pass  # first batch defines the types
-    src = embeddings.select(id_col, vec_col).persist()
-    sig = srp_signature_fixed(
-        src, dim, bits_per_table * n_tables, vec_col, scale=scale
+    n_planes = bits_per_table * n_tables
+    return _srp_append(
+        embeddings,
+        path,
+        batch_id,
+        {
+            "dim": dim,
+            "bits_per_table": bits_per_table,
+            "n_tables": n_tables,
+            "scale": scale,
+            "kind": "fixed",
+        },
+        id_col,
+        vec_col,
+        lambda src: srp_signature_fixed(
+            src, dim, n_planes, vec_col, scale=scale
+        ),
     )
-    tables = _srp_table_structs(bits_per_table, n_tables)
-    _drop_manifest_row(spark, f"{path}/rows_manifest", batch_id)
-    _drop_batch_dirs(spark, batch_id, f"{path}/rows")
-    _write_batch_keyed(
-        sig.select(
-            F.col(id_col), F.col(vec_col), F.explode(tables).alias("tb")
-        )
-        .select(id_col, vec_col, "tb.t", "tb.bucket")
-        .withColumn("batch", F.lit(batch_id).cast("bigint")),
-        f"{path}/rows",
-        ("batch", "t", "bucket"),
-    )
-    mm, n_rows = _manifest_from_agg(src, id_col, batch_id)
-    _write_batch_keyed(mm, f"{path}/rows_manifest", ("batch",))
-    src.unpersist(blocking=False)
-    return {"batch": int(batch_id), "n_rows": n_rows}
 
 
 def srp_index_topk_fixed(
@@ -1401,44 +1189,22 @@ def srp_index_topk_fixed(
     suffices), and the exact double cosine re-ranks. Every step is
     integer or frozen-shape IEEE — the DuckDB oracle replays append,
     fold, and probe in one statement."""
-    from .retrieval import _batches_disjoint
-
     meta = spark.read.parquet(f"{index_path}/meta").collect()[0]
     _srp_require_kind(meta, "fixed", index_path)
-    dim = int(meta["dim"])
-    bits_per_table = int(meta["bits_per_table"])
-    n_tables = int(meta["n_tables"])
     scale = int(meta["scale"])
-    planes = _srp_fixed_planes(bits_per_table * n_tables, dim)
+    planes = _srp_fixed_planes(
+        int(meta["bits_per_table"]) * int(meta["n_tables"]), int(meta["dim"])
+    )
     qq = np.asarray(
         [int(math.floor(float(x) * scale)) for x in query_vec],
         dtype=np.int64,
     )
-    dots = planes @ qq
     qbits = 0
-    for i, d in enumerate(dots):
+    for i, d in enumerate(planes @ qq):
         if int(d) >= 0:
             qbits |= 1 << i
-    rows = spark.read.parquet(f"{index_path}/rows")
-    cond = _srp_query_cond(qbits, bits_per_table, n_tables)
-    candidates = rows.where(cond).select(id_col, vec_col, "batch")
-    # _batches_disjoint short-circuits True on <=1 live batches, so no
-    # separate _n_batches pre-check (one listStatus, not two)
-    if not _batches_disjoint(
-        spark,
-        f"{index_path}/rows",
-        f"{index_path}/rows_manifest",
-        "min_id",
-        "max_id",
-        "n_rows",
-    ):
-        candidates = candidates.groupBy(id_col).agg(
-            F.max_by(vec_col, "batch").alias(vec_col)
-        )
-    else:
-        candidates = candidates.dropDuplicates([id_col])
-    return brute_force_topk(
-        candidates.select(id_col, vec_col), query_vec, k, id_col, vec_col
+    return _srp_index_probe(
+        spark, index_path, meta, qbits, query_vec, k, id_col, vec_col
     )
 
 
@@ -1925,92 +1691,55 @@ def ivf_index_append(
         {path}/drift/batch=        (n_rows, mean_d2, drift_ratio)
 
     Returns {"batch", "n_rows", "mean_d2", "drift_ratio"}."""
-    from pyspark.errors import AnalysisException
-
-    from .retrieval import (
-        _drop_batch_dirs,
-        _drop_manifest_row,
-        _write_batch_keyed,
-    )
-
     spark = embeddings.sparkSession
-    try:
-        crows = spark.read.parquet(f"{path}/centroids").orderBy("cell")
-        centroids = np.asarray([list(r["c"]) for r in crows.collect()])
-        fit_mean_d2 = float(
-            spark.read.parquet(f"{path}/meta").collect()[0]["fit_mean_d2"]
-        )
-    except AnalysisException:
+    meta = store.open_frozen(spark, path, IVF, "IVF")
+    if meta is None:
         centroids = ivf_train_centroids(
             embeddings, n_cells, id_col=id_col, vec_col=vec_col
         )
-        fit_mean_d2 = None
-    try:
-        # normalize to the index's stored column types (one footer
-        # read) — a feed switching float → double mid-stream would
-        # otherwise write a mixed-type tree that fails at probe time
-        stored = spark.read.parquet(f"{path}/rows").schema
-        embeddings = embeddings.select(
-            F.col(id_col).cast(stored[id_col].dataType),
-            F.col(vec_col).cast(stored[vec_col].dataType),
-        )
-    except AnalysisException:
-        pass  # first batch defines the types
-    assigned = _ivf_assign_with_d2(
-        embeddings.select(id_col, vec_col), centroids, vec_col
-    ).persist()
+    else:
+        centroids = _read_centroids(spark, path)
+    embeddings = store.cast_to_stored(
+        spark, path, IVF, embeddings, (id_col, vec_col)
+    )
+    assigned = _ivf_assign_with_d2(embeddings, centroids, vec_col).persist()
     stats = assigned.agg(
         F.count(F.lit(1)).cast("bigint").alias("n_rows"),
         F.avg("d2").alias("mean_d2"),
     ).collect()[0]
     mean_d2 = float(stats["mean_d2"] or 0.0)
-    if fit_mean_d2 is None:
-        # quantizer identity persists BEFORE any rows so a crash
-        # between the two never leaves rows assigned to lost centroids
+    if meta is None:
         fit_mean_d2 = mean_d2
-        spark.createDataFrame(
-            [(i, [float(x) for x in row]) for i, row in enumerate(centroids)],
-            "cell int, c array<double>",
-        ).coalesce(1).write.mode("overwrite").parquet(f"{path}/centroids")
-        spark.createDataFrame(
-            [(len(centroids), fit_mean_d2)],
-            "n_cells int, fit_mean_d2 double",
-        ).coalesce(1).write.mode("overwrite").parquet(f"{path}/meta")
-    # fail-closed replay: manifest row first, then the batch dir — a
-    # different-content replay must replace the ivf_cell= leaves too
-    # (dynamic overwrite only swaps the leaves present in new data)
-    _drop_manifest_row(spark, f"{path}/rows_manifest", batch_id)
-    _drop_batch_dirs(spark, batch_id, f"{path}/rows")
-    _write_batch_keyed(
-        assigned.withColumn("batch", F.lit(batch_id).cast("bigint")),
-        f"{path}/rows",
-        ("batch", "ivf_cell"),
+        store.persist_frozen(
+            path,
+            IVF,
+            {
+                "meta": spark.createDataFrame(
+                    [(len(centroids), fit_mean_d2)],
+                    "n_cells int, fit_mean_d2 double",
+                ),
+                "centroids": spark.createDataFrame(
+                    [
+                        (i, [float(x) for x in row])
+                        for i, row in enumerate(centroids)
+                    ],
+                    "cell int, c array<double>",
+                ),
+            },
+        )
+    else:
+        fit_mean_d2 = float(meta["fit_mean_d2"])
+    store.append(
+        spark, path, IVF, batch_id, {"rows": assigned}, assigned, id_col
     )
     drift_ratio = mean_d2 / fit_mean_d2 if fit_mean_d2 > 0 else 1.0
-    _write_batch_keyed(
-        spark.createDataFrame(
-            [
-                (
-                    int(batch_id),
-                    int(stats["n_rows"]),
-                    mean_d2,
-                    float(drift_ratio),
-                )
-            ],
-            "batch bigint, n_rows bigint, mean_d2 double,"
-            " drift_ratio double",
-        ),
-        f"{path}/drift",
-        ("batch",),
-    )
-    _write_batch_keyed(
-        assigned.agg(
-            F.min(F.col(id_col)).alias("min_id"),
-            F.max(F.col(id_col)).alias("max_id"),
-            F.count(F.lit(1)).cast("bigint").alias("n_rows"),
-        ).withColumn("batch", F.lit(batch_id).cast("bigint")),
-        f"{path}/rows_manifest",
-        ("batch",),
+    store.write_drift(
+        spark,
+        path,
+        batch_id,
+        n_rows=int(stats["n_rows"]),
+        mean_d2=mean_d2,
+        drift_ratio=float(drift_ratio),
     )
     assigned.unpersist(blocking=False)
     return {
@@ -2019,6 +1748,12 @@ def ivf_index_append(
         "mean_d2": mean_d2,
         "drift_ratio": float(drift_ratio),
     }
+
+
+def _read_centroids(spark, path: str) -> np.ndarray:
+    """The frozen coarse centroids, in cell order."""
+    crows = spark.read.parquet(f"{path}/centroids").orderBy("cell")
+    return np.asarray([list(r["c"]) for r in crows.collect()])
 
 
 def ivf_index_topk(
@@ -2042,10 +1777,7 @@ def ivf_index_topk(
     — the append-only crawl case skips the fold entirely, and the
     fold only ever runs over the PRUNED nprobe/n_cells slice, never
     the index."""
-    from .retrieval import _batches_disjoint
-
-    crows = spark.read.parquet(f"{index_path}/centroids").orderBy("cell")
-    centroids = np.asarray([list(r["c"]) for r in crows.collect()])
+    centroids = _read_centroids(spark, index_path)
     q = np.asarray(query_vec, dtype=np.float64)
     d2 = ((centroids - q[None, :]) ** 2).sum(axis=1)
     probes = [int(i) for i in d2.argsort()[:nprobe]]
@@ -2053,16 +1785,9 @@ def ivf_index_topk(
     candidates = rows.where(F.col("ivf_cell").isin(probes)).select(
         id_col, vec_col, "batch"
     )
-    # _batches_disjoint short-circuits True on <=1 live batches, so no
-    # separate _n_batches pre-check (one listStatus, not two)
-    if not _batches_disjoint(
-        spark,
-        f"{index_path}/rows",
-        f"{index_path}/rows_manifest",
-        "min_id",
-        "max_id",
-        "n_rows",
-    ):
+    # batches_disjoint short-circuits True on <=1 live batches, so no
+    # separate batch-count pre-check (one listStatus, not two)
+    if not store.batches_disjoint(spark, index_path, IVF):
         candidates = candidates.groupBy(id_col).agg(
             F.max_by(vec_col, "batch").alias(vec_col)
         )
@@ -2087,22 +1812,10 @@ def ivf_drift_report(
     the latter), cheap because the append already paid the distance
     computation. Recommends a re-fit when the live mean squared
     distance exceeds ``refit_threshold ×`` the creation batch's."""
-    from pyspark.errors import AnalysisException
-
-    if live not in ("full", "sample", "off"):
-        raise ValueError(f"unknown live mode {live!r}")
+    log = store.read_drift(spark, index_path, live)
     fit_mean_d2 = float(
         spark.read.parquet(f"{index_path}/meta").collect()[0]["fit_mean_d2"]
     )
-    try:
-        log = [
-            r.asDict()
-            for r in spark.read.parquet(f"{index_path}/drift")
-            .orderBy("batch")
-            .collect()
-        ]
-    except AnalysisException:
-        log = []
     if live == "off":
         n = sum(int(r["n_rows"]) for r in log)
         mean_d2 = (
@@ -2145,69 +1858,16 @@ def ivf_index_compact(spark, src_path: str, dst_path: str) -> str:
     construction. Rewrites the folded batch-0 drift row and manifest
     so post-compaction appends keep both protocols working. Crash
     contract: publish_version."""
-    from ..sources.writers import publish_version
-
-    centroids = spark.read.parquet(f"{src_path}/centroids")
-    meta = spark.read.parquet(f"{src_path}/meta")
-    fit_mean_d2 = float(meta.collect()[0]["fit_mean_d2"])
-
-    def build(vdir: str) -> None:
-        centroids.coalesce(1).write.mode("overwrite").parquet(
-            f"{vdir}/centroids"
-        )
-        meta.coalesce(1).write.mode("overwrite").parquet(f"{vdir}/meta")
-        rows = spark.read.parquet(f"{src_path}/rows")
-        id_col = [
-            f.name
-            for f in rows.schema.fields
-            if f.name not in ("ivf_cell", "d2", "batch")
-            and "array" not in f.dataType.simpleString()
-        ][0]
-        others = [
-            f.name
-            for f in rows.schema.fields
-            if f.name not in (id_col, "batch", "ivf_cell")
-        ]
-        (
-            rows.groupBy(id_col)
-            .agg(
-                *[F.max_by(c, "batch").alias(c) for c in others],
-                F.max_by("ivf_cell", "batch").alias("ivf_cell"),
-            )
-            .withColumn("batch", F.lit(0).cast("bigint"))
-            .write.mode("overwrite")
-            .partitionBy("batch", "ivf_cell")
-            .parquet(f"{vdir}/rows")
-        )
-        folded = spark.read.parquet(f"{vdir}/rows")
-        st = folded.agg(
-            F.count(F.lit(1)).cast("bigint").alias("n_rows"),
-            F.avg("d2").alias("mean_d2"),
-        ).collect()[0]
-        m = float(st["mean_d2"] or 0.0)
-        spark.createDataFrame(
-            [
-                (
-                    0,
-                    int(st["n_rows"]),
-                    m,
-                    m / fit_mean_d2 if fit_mean_d2 > 0 else 1.0,
-                )
-            ],
-            "batch bigint, n_rows bigint, mean_d2 double,"
-            " drift_ratio double",
-        ).write.mode("overwrite").partitionBy("batch").parquet(
-            f"{vdir}/drift"
-        )
-        # agg-then-withColumn (the _sq8_write_manifest discipline):
-        # the read-back manifest schema puts the `batch` partition
-        # column LAST, so a positional tuple starting with 0 would
-        # land batch=<n_rows> with garbage min/max — and the batch-0
-        # row the post-compaction disjoint fast path needs would
-        # never exist.
-        _sq8_write_manifest(spark, vdir, id_col)
-
-    return publish_version(spark, dst_path, build)
+    fit = float(
+        spark.read.parquet(f"{src_path}/meta").collect()[0]["fit_mean_d2"]
+    )
+    return store.compact(
+        spark,
+        src_path,
+        dst_path,
+        IVF,
+        extra=store.fold_drift(spark, fit, "d2", "mean_d2"),
+    )
 
 
 def ivf_index_refit(
@@ -2222,24 +1882,12 @@ def ivf_index_refit(
     from ..sources.writers import publish_version
 
     rows = spark.read.parquet(f"{src_path}/rows")
-    id_col = [
-        f.name
-        for f in rows.schema.fields
-        if f.name not in ("ivf_cell", "d2", "batch")
-        and "array" not in f.dataType.simpleString()
-    ][0]
-    vec_col = [
-        f.name
-        for f in rows.schema.fields
-        if "array" in f.dataType.simpleString()
-    ][0]
+    id_col, vec_col = rows.columns[:2]
     if n_cells is None:
         n_cells = int(
             spark.read.parquet(f"{src_path}/meta").collect()[0]["n_cells"]
         )
-    folded = rows.groupBy(id_col).agg(
-        F.max_by(vec_col, "batch").alias(vec_col)
-    )
+    folded = store.latest_wins(rows.select(id_col, vec_col, "batch"), [id_col])
 
     def build(vdir: str) -> None:
         ivf_index_append(
@@ -2283,74 +1931,38 @@ def ivf_index_append_fixed(
     srp_index_append discipline — round-15 review): a later append
     passing different values raises instead of silently
     mis-quantizing. Returns {"batch", "n_rows"}."""
-    from pyspark.errors import AnalysisException
-
-    from .retrieval import (
-        _drop_batch_dirs,
-        _drop_manifest_row,
-        _write_batch_keyed,
-    )
-
     spark = embeddings.sparkSession
     base = _fixed_base(embeddings, id_col, vec_col, scale)
-    try:
-        cents = spark.read.parquet(f"{path}/centroids")
-        created = True
-    except AnalysisException:
-        created = False
-    if created:
-        # NEVER regenerate centroids for an existing tree (round-15
-        # review): the centroids ARE the index identity — rebuilding
-        # them from a later batch would desynchronize every
-        # already-assigned row's ivf_cell from the probe's pruning.
-        # A tree with centroids but no meta is a foreign/partial
-        # artifact: refuse loudly rather than guess its scale.
-        try:
-            meta = spark.read.parquet(f"{path}/meta").collect()[0]
-        except AnalysisException:
-            raise ValueError(
-                f"fixed IVF index at {path} has centroids but no meta"
-                " — its quantizer identity (n_centroids, scale) is"
-                " unknowable; rebuild the index (the append would"
-                " otherwise quantize against an unverifiable grid)"
-            )
-        stored = (int(meta["n_centroids"]), int(meta["scale"]))
-        if stored != (n_centroids, scale):
-            raise ValueError(
-                f"fixed IVF index at {path} was created with"
-                f" (n_centroids, scale)={stored}; appending with"
-                f" {(n_centroids, scale)} would quantize incompatibly"
-            )
-    else:
-        # quantizer identity persists BEFORE any rows (crash
-        # ordering), meta BEFORE centroids: the centroids read above
-        # is the creation marker, so a crash between the two writes
-        # leaves a meta-only tree the next append simply recreates —
-        # never the unrecoverable centroids-without-meta state.
-        spark.createDataFrame(
-            [(n_centroids, scale)], "n_centroids int, scale int"
-        ).coalesce(1).write.mode("overwrite").parquet(f"{path}/meta")
-        (
-            base.orderBy(id_col)
-            .limit(n_centroids)
-            .select(F.col(id_col).alias("cent_id"), F.col("qv").alias("cq"))
-            .coalesce(1)
-            .write.mode("overwrite")
-            .parquet(f"{path}/centroids")
+    # NEVER regenerate centroids for an existing tree (round-15
+    # review): the centroids ARE the index identity — rebuilding them
+    # from a later batch would desynchronize every already-assigned
+    # row's ivf_cell from the probe's pruning. A crash between the
+    # meta and centroids writes leaves a meta-only tree the next
+    # append simply recreates (centroids are the creation marker).
+    identity = {"n_centroids": n_centroids, "scale": scale}
+    meta = store.open_frozen(spark, path, IVF, "fixed IVF", identity, "quantize")
+    if meta is None:
+        store.persist_frozen(
+            path,
+            IVF,
+            {
+                "meta": spark.createDataFrame(
+                    [(n_centroids, scale)], "n_centroids int, scale int"
+                ),
+                "centroids": base.orderBy(id_col)
+                .limit(n_centroids)
+                .select(
+                    F.col(id_col).alias("cent_id"), F.col("qv").alias("cq")
+                ),
+            },
         )
-        cents = spark.read.parquet(f"{path}/centroids")
+    cents = spark.read.parquet(f"{path}/centroids")
     assigned = _fixed_assign(base, cents, id_col).persist()
-    _drop_manifest_row(spark, f"{path}/rows_manifest", batch_id)
-    _drop_batch_dirs(spark, batch_id, f"{path}/rows")
-    _write_batch_keyed(
-        assigned.withColumn("batch", F.lit(batch_id).cast("bigint")),
-        f"{path}/rows",
-        ("batch", "ivf_cell"),
+    mm = store.append(
+        spark, path, IVF, batch_id, {"rows": assigned}, assigned, id_col
     )
-    mm, n_rows = _manifest_from_agg(assigned, id_col, batch_id)
-    _write_batch_keyed(mm, f"{path}/rows_manifest", ("batch",))
     assigned.unpersist(blocking=False)
-    return {"batch": int(batch_id), "n_rows": n_rows}
+    return {"batch": int(batch_id), "n_rows": mm["n"]}
 
 
 def ivf_index_topk_fixed(
@@ -2376,8 +1988,6 @@ def ivf_index_topk_fixed(
     the index's own ``meta`` (round-15 review — a caller-held scale
     could silently quantize the query on a different grid than the
     stored centroids)."""
-    from .retrieval import _batches_disjoint
-
     scale = int(
         spark.read.parquet(f"{index_path}/meta").collect()[0]["scale"]
     )
@@ -2395,16 +2005,9 @@ def ivf_index_topk_fixed(
     candidates = rows.where(F.col("ivf_cell").isin(probes)).select(
         id_col, "v", "batch"
     )
-    # _batches_disjoint short-circuits True on <=1 live batches, so no
-    # separate _n_batches pre-check (one listStatus, not two)
-    if not _batches_disjoint(
-        spark,
-        f"{index_path}/rows",
-        f"{index_path}/rows_manifest",
-        "min_id",
-        "max_id",
-        "n_rows",
-    ):
+    # batches_disjoint short-circuits True on <=1 live batches, so no
+    # separate batch-count pre-check (one listStatus, not two)
+    if not store.batches_disjoint(spark, index_path, IVF):
         candidates = candidates.groupBy(id_col).agg(
             F.max_by("v", "batch").alias("v")
         )
@@ -3110,14 +2713,6 @@ def _incremental_drops(
     return cross.unionByName(within).distinct()
 
 
-def _fs_exists(spark, path: str) -> bool:
-    # Hadoop FS, not os.path — correct for hdfs://, s3a:// URIs too
-    jvm = spark._jvm
-    conf = spark._jsc.hadoopConfiguration()
-    p = jvm.org.apache.hadoop.fs.Path(path)
-    return p.getFileSystem(conf).exists(p)
-
-
 def semantic_centroids_write_fixed(
     embeddings: DataFrame,
     path: str,
@@ -3206,8 +2801,8 @@ def semantic_dedup_incremental_fixed(
     from ..sources import rawstore
 
     if not (
-        _fs_exists(spark, f"{index_path}/rows")
-        or _fs_exists(spark, rawstore.sealed_root(f"{index_path}/rows"))
+        store.exists(spark, f"{index_path}/rows")
+        or store.exists(spark, rawstore.sealed_root(f"{index_path}/rows"))
     ):
         idx_rows = new_assigned.where(F.lit(False)).select(
             id_col, "ivf_cell", "v", "nrm"
@@ -3252,35 +2847,15 @@ def semantic_index_append_fixed(
     whose corrected vectors assign to DIFFERENT cells would otherwise
     strand the superseded rows, and the incremental dedup would keep
     verifying candidates against them)."""
-    from .retrieval import _drop_batch_dirs
-
     spark = new_df.sparkSession
     cents = spark.read.parquet(f"{index_path}/centroids")
     assigned = _fixed_assign(
         _fixed_base(new_df, id_col, vec_col, scale), cents, id_col
     ).withColumn("batch", F.lit(batch_id))
-    _drop_batch_dirs(
-        spark, batch_id, f"{index_path}/rows/ivf_cell=*"
+    store.drop_batch_dirs(spark, batch_id, f"{index_path}/rows/ivf_cell=*")
+    write_parquet_partitioned(
+        assigned, f"{index_path}/rows", ("ivf_cell", "batch")
     )
-    old = spark.conf.get("spark.sql.sources.partitionOverwriteMode", None)
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        (
-            assigned.write.mode("overwrite")
-            .partitionBy("ivf_cell", "batch")
-            .parquet(f"{index_path}/rows")
-        )
-    finally:
-        if old is not None:
-            spark.conf.set(
-                "spark.sql.sources.partitionOverwriteMode", old
-            )
-        else:
-            # key was unset before: leaving it set to dynamic would
-            # silently change later overwrite-partitionBy writes
-            spark.conf.unset(
-                "spark.sql.sources.partitionOverwriteMode"
-            )
 
 
 def semantic_index_write(
@@ -3366,7 +2941,7 @@ def semantic_dedup_incremental(
     new_assigned = persist_into(
         caches, _assign_vnrm(new_df, cents, id_col, vec_col)
     )
-    if not _fs_exists(spark, f"{index_path}/rows"):
+    if not store.exists(spark, f"{index_path}/rows"):
         idx_rows = new_assigned.where(F.lit(False))
     else:
         idx_rows = spark.read.parquet(f"{index_path}/rows")
@@ -3394,32 +2969,12 @@ def semantic_index_append(
     replay-idempotent like :func:`semantic_index_append_fixed`,
     including the same cross-cell leaf delete before the write (a
     different-content replay must replace, not merge)."""
-    from .retrieval import _drop_batch_dirs
-
     spark = new_df.sparkSession
     cents = semantic_read_centroids(spark, index_path)
     assigned = _assign_vnrm(new_df, cents, id_col, vec_col).withColumn(
         "batch", F.lit(batch_id)
     )
-    _drop_batch_dirs(
-        spark, batch_id, f"{index_path}/rows/ivf_cell=*"
+    store.drop_batch_dirs(spark, batch_id, f"{index_path}/rows/ivf_cell=*")
+    write_parquet_partitioned(
+        assigned, f"{index_path}/rows", ("ivf_cell", "batch")
     )
-    old = spark.conf.get("spark.sql.sources.partitionOverwriteMode", None)
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        (
-            assigned.write.mode("overwrite")
-            .partitionBy("ivf_cell", "batch")
-            .parquet(f"{index_path}/rows")
-        )
-    finally:
-        if old is not None:
-            spark.conf.set(
-                "spark.sql.sources.partitionOverwriteMode", old
-            )
-        else:
-            # key was unset before: leaving it set to dynamic would
-            # silently change later overwrite-partitionBy writes
-            spark.conf.unset(
-                "spark.sql.sources.partitionOverwriteMode"
-            )

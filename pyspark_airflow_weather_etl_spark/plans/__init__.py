@@ -780,7 +780,8 @@ _VERIFIED_R14: frozenset[str] = frozenset(
 # Round-15 priority head: NEW entries plus names whose engine path
 # changed this round after their latest driver row — the BM25
 # probe-side overlap guard (every entry probing an at-rest bm25
-# tree), the fail-closed _drop_manifest_row ordering in the
+# tree), the fail-closed manifest-row-first ordering (now owned by
+# sources/indexstore.append) in the
 # sq8/ivf/positional/bm25/srp appends (every entry building a
 # batch-keyed tree), the ivf_index_compact manifest fix, and the
 # unigram _em_word_state dispatch refactor.

@@ -2353,6 +2353,7 @@ def streaming_span_corruption(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from pyspark.sql import functions as FF
 
+    from ..sources.writers import write_parquet_partitioned
     from .streamplans import _stage_document_batches
 
     if sf_dir not in _SPAN_STREAM_STAGE:
@@ -2368,33 +2369,11 @@ def streaming_span_corruption(spark: SparkSession, sf_dir: str) -> DataFrame:
             if batch_df.isEmpty():
                 return
             out = X.span_corruption_pairs(batch_df)
-            s = out.sparkSession
-            old = s.conf.get(
-                "spark.sql.sources.partitionOverwriteMode", None
+            write_parquet_partitioned(
+                out.withColumn("batch", FF.lit(batch_id).cast("bigint")),
+                f"{tmp}/pairs",
+                ("batch",),
             )
-            s.conf.set(
-                "spark.sql.sources.partitionOverwriteMode", "dynamic"
-            )
-            try:
-                (
-                    out.withColumn(
-                        "batch", FF.lit(batch_id).cast("bigint")
-                    )
-                    .write.mode("overwrite")
-                    .partitionBy("batch")
-                    .parquet(f"{tmp}/pairs")
-                )
-            finally:
-                if old is not None:
-                    s.conf.set(
-                        "spark.sql.sources.partitionOverwriteMode", old
-                    )
-                else:
-                    # key was unset before: leaving it set to dynamic would
-                    # silently change later overwrite-partitionBy writes
-                    s.conf.unset(
-                        "spark.sql.sources.partitionOverwriteMode"
-                    )
 
         (
             stream.writeStream.foreachBatch(_proc)

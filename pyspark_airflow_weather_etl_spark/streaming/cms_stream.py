@@ -25,6 +25,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.sketch import cms_build
+from ..sources.writers import write_parquet_partitioned
 
 _run_ids = itertools.count()
 
@@ -49,27 +50,10 @@ def run_streaming_cms(
     spark = streaming_session(spark)
 
     def process(batch: DataFrame, batch_id: int) -> None:
-        bs = batch.sparkSession
         cells = cms_build(key_fn(batch), "__key", w=w, d=d).withColumn(
             "batch", F.lit(batch_id)
         )
-        old = bs.conf.get("spark.sql.sources.partitionOverwriteMode", None)
-        bs.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        try:
-            cells.write.mode("overwrite").partitionBy("batch").parquet(
-                out_path
-            )
-        finally:
-            if old is not None:
-                bs.conf.set(
-                    "spark.sql.sources.partitionOverwriteMode", old
-                )
-            else:
-                # key was unset before: leaving it set to dynamic would
-                # silently change later overwrite-partitionBy writes
-                bs.conf.unset(
-                    "spark.sql.sources.partitionOverwriteMode"
-                )
+        write_parquet_partitioned(cells, out_path, ("batch",))
 
     name = f"cms_cells_{next(_run_ids)}"
     writer = (

@@ -29,29 +29,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.text import encode_documents
+from ..sources.writers import write_parquet_partitioned
 
 _run_ids = itertools.count()
-
-
-def _append_batch_keyed(df: DataFrame, out_path: str, batch_id: int) -> None:
-    spark = df.sparkSession
-    old = spark.conf.get("spark.sql.sources.partitionOverwriteMode", None)
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        (
-            df.withColumn("batch", F.lit(batch_id))
-            .write.mode("overwrite")
-            .partitionBy("batch")
-            .parquet(out_path)
-        )
-    finally:
-        if old is not None:
-            spark.conf.set("spark.sql.sources.partitionOverwriteMode", old)
-        else:
-            # the key was unset before; leaving it set to dynamic would
-            # silently change later overwrite-partitionBy writes from
-            # full-tree replace to partial overwrite
-            spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
 
 
 def run_streaming_encode(
@@ -81,10 +61,9 @@ def run_streaming_encode(
     vocab = spark.read.parquet(vocab_path)
 
     def process(batch: DataFrame, batch_id: int) -> None:
-        _append_batch_keyed(
-            encode_documents(batch, vocab, oov_id=oov_id),
-            out_path,
-            batch_id,
+        out = encode_documents(batch, vocab, oov_id=oov_id)
+        write_parquet_partitioned(
+            out.withColumn("batch", F.lit(batch_id)), out_path, ("batch",)
         )
 
     name = f"encode_{next(_run_ids)}"

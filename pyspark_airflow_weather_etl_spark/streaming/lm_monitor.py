@@ -26,29 +26,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.text import bigram_lm_load, lm_bigram_score_against
+from ..sources.writers import write_parquet_partitioned
 
 _run_ids = itertools.count()
-
-
-def _append_batch_keyed(df: DataFrame, out_path: str, batch_id: int) -> None:
-    spark = df.sparkSession
-    old = spark.conf.get("spark.sql.sources.partitionOverwriteMode", None)
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        (
-            df.withColumn("batch", F.lit(batch_id))
-            .write.mode("overwrite")
-            .partitionBy("batch")
-            .parquet(out_path)
-        )
-    finally:
-        if old is not None:
-            spark.conf.set("spark.sql.sources.partitionOverwriteMode", old)
-        else:
-            # the key was unset before; leaving it set to dynamic would
-            # silently change later overwrite-partitionBy writes from
-            # full-tree replace to partial overwrite
-            spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
 
 
 def run_streaming_lm_score(
@@ -74,10 +54,9 @@ def run_streaming_lm_score(
     model = bigram_lm_load(spark, model_path)
 
     def process(batch: DataFrame, batch_id: int) -> None:
-        _append_batch_keyed(
-            lm_bigram_score_against(batch, model, id_col, text_col),
-            out_path,
-            batch_id,
+        out = lm_bigram_score_against(batch, model, id_col, text_col)
+        write_parquet_partitioned(
+            out.withColumn("batch", F.lit(batch_id)), out_path, ("batch",)
         )
 
     name = f"lm_score_{next(_run_ids)}"

@@ -28,6 +28,7 @@ from ..operators.pca import (
     moments_from_rows,
     train_from_moments,
 )
+from ..sources.writers import write_parquet_partitioned
 
 _run_ids = itertools.count()
 
@@ -51,30 +52,13 @@ def run_streaming_pca_moments(
     spark = streaming_session(spark)
 
     def process(batch: DataFrame, batch_id: int) -> None:
-        bs = batch.sparkSession
         rows = (
             moment_partials(batch, vec_col, d)
             .groupBy("i", "j")
             .agg(F.sum("v").alias("v"))
             .withColumn("batch", F.lit(batch_id))
         )
-        old = bs.conf.get("spark.sql.sources.partitionOverwriteMode", None)
-        bs.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        try:
-            rows.write.mode("overwrite").partitionBy("batch").parquet(
-                out_path
-            )
-        finally:
-            if old is not None:
-                bs.conf.set(
-                    "spark.sql.sources.partitionOverwriteMode", old
-                )
-            else:
-                # key was unset before: leaving it set to dynamic would
-                # silently change later overwrite-partitionBy writes
-                bs.conf.unset(
-                    "spark.sql.sources.partitionOverwriteMode"
-                )
+        write_parquet_partitioned(rows, out_path, ("batch",))
 
     name = f"pca_moments_{next(_run_ids)}"
     writer = (

@@ -36,6 +36,7 @@ from pyspark.sql import functions as F
 
 from ..operators.merge import scd2_compact
 from ..sources.rawstore import read_raw_store
+from ..sources.writers import write_parquet_partitioned
 
 _run_ids = itertools.count()
 
@@ -69,59 +70,27 @@ def run_streaming_scd2(
     spark = streaming_session(spark)
 
     def process(batch: DataFrame, batch_id: int) -> None:
-        # foreachBatch runs on a CLONED session with isolated conf —
-        # the overwrite-mode switch MUST target batch.sparkSession,
-        # not the outer session, or a vanilla-session deployment keeps
-        # STATIC overwrite in the clone and every raw write truncates
-        # the store to the current batch (caught by the driver's
-        # vanilla-session contract run; the engine session masked it
-        # because its clones inherit dynamic as the session default)
+        # both writes are per-write dynamic overwrites: foreachBatch
+        # runs on a CLONED session, so a session-conf switch would
+        # have to target batch.sparkSession — the write option needs
+        # no session at all (a vanilla STATIC session included)
         bs = batch.sparkSession
         keyed = _with_bucket(batch, key_col, n_buckets)
-        old = bs.conf.get(
-            "spark.sql.sources.partitionOverwriteMode", None
+        write_parquet_partitioned(
+            keyed.withColumn("batch", F.lit(batch_id)),
+            raw_path,
+            ("kb", "batch"),
         )
-        bs.conf.set(
-            "spark.sql.sources.partitionOverwriteMode", "dynamic"
+        touched = sorted(r.kb for r in keyed.select("kb").distinct().collect())
+        # sealed ∪ unsealed-live view: identical to a plain read until
+        # sources.rawstore.seal_batches has run on raw_path, after which
+        # old batches come from the compacted sealed snapshot (still
+        # kb-partition-pruned) and replay garbage is ledger-excluded.
+        raw = read_raw_store(bs, raw_path).where(F.col("kb").isin(touched))
+        hist = scd2_compact(raw, key_col, state_col, ts_col, tiebreak_col)
+        write_parquet_partitioned(
+            _with_bucket(hist, key_col, n_buckets), history_path, ("kb",)
         )
-        try:
-            (
-                keyed.withColumn("batch", F.lit(batch_id))
-                .write.mode("overwrite")
-                .partitionBy("kb", "batch")
-                .parquet(raw_path)
-            )
-            touched = sorted(
-                r.kb for r in keyed.select("kb").distinct().collect()
-            )
-            # sealed ∪ unsealed-live view: identical to a plain read
-            # until sources.rawstore.seal_batches has run on raw_path,
-            # after which old batches come from the compacted sealed
-            # snapshot (still kb-partition-pruned) and replay garbage
-            # is ledger-excluded.
-            raw = read_raw_store(bs, raw_path).where(
-                F.col("kb").isin(touched)
-            )
-            hist = scd2_compact(
-                raw, key_col, state_col, ts_col, tiebreak_col
-            )
-            (
-                _with_bucket(hist, key_col, n_buckets)
-                .write.mode("overwrite")
-                .partitionBy("kb")
-                .parquet(history_path)
-            )
-        finally:
-            if old is not None:
-                bs.conf.set(
-                    "spark.sql.sources.partitionOverwriteMode", old
-                )
-            else:
-                # key was unset before: leaving it set to dynamic would
-                # silently change later overwrite-partitionBy writes
-                bs.conf.unset(
-                    "spark.sql.sources.partitionOverwriteMode"
-                )
 
     name = f"scd2_{next(_run_ids)}"
     writer = (

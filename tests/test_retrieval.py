@@ -711,6 +711,15 @@ def test_proximity_at_rest_equals_ad_hoc_and_prunes(spark, docs, tmp_path):
     assert [f.name for f in empty.schema.fields] == [
         "pair_id", "doc_id", "n_pairs",
     ]
+    # the ad-hoc empty-input guards carry the corpus's OWN id type
+    from pyspark_airflow_weather_etl_spark.operators.retrieval import (
+        phrase_counts,
+    )
+
+    sdocs = docs.select(F.col("doc_id").cast("string").alias("doc_id"), "text")
+    for empty in (proximity_counts(sdocs, []), phrase_counts(sdocs, [])):
+        assert empty.count() == 0
+        assert empty.schema["doc_id"].dataType.simpleString() == "string"
 
 
 def test_at_rest_strategies_are_result_identical(spark, docs, tmp_path):

@@ -1657,9 +1657,9 @@ def test_append_manifest_fails_closed_on_partial_replay(spark, tmp_path):
     range."""
     import shutil
 
-    from pyspark_airflow_weather_etl_spark.operators.retrieval import (
-        _batches_disjoint,
-        _drop_manifest_row,
+    from pyspark_airflow_weather_etl_spark.sources.indexstore import (
+        drop_manifest_row as _drop_manifest_row,
+        ranges_disjoint as _batches_disjoint,
     )
     from pyspark_airflow_weather_etl_spark.operators.similarity import (
         srp_index_append,
@@ -1774,8 +1774,8 @@ def test_completed_replay_replaces_stale_subpartitions(spark, tmp_path):
     manifest row whose range falsely 'proves' them away. The appends
     now drop the whole batch dir first: a completed replay is a true
     replacement."""
-    from pyspark_airflow_weather_etl_spark.operators.retrieval import (
-        _batches_disjoint,
+    from pyspark_airflow_weather_etl_spark.sources.indexstore import (
+        ranges_disjoint as _batches_disjoint,
     )
     from pyspark_airflow_weather_etl_spark.operators.similarity import (
         srp_index_append,
@@ -2064,8 +2064,8 @@ def test_drop_batch_dirs_literal_paths_with_glob_metachars(
     window); '*' opts into globbing for the cell-first layout."""
     import os
 
-    from pyspark_airflow_weather_etl_spark.operators.retrieval import (
-        _drop_batch_dirs,
+    from pyspark_airflow_weather_etl_spark.sources.indexstore import (
+        drop_batch_dirs as _drop_batch_dirs,
     )
 
     base = tmp_path / "run[1]" / "idx" / "rows" / "batch=2"
