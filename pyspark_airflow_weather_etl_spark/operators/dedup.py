@@ -97,7 +97,8 @@ def _estimated_scan_splits(
     conversion. Returns -1 when any file is not a stat-able local
     path (the caller falls back to ``df.rdd``). Mirrors
     ``FilePartition.maxSplitBytes`` + ``getFilePartitions`` (Spark
-    3.5/4.x): bytesPerCore over minPartitionNum, files chunked at
+    3.5/4.x): bytesPerCore over minPartitionNum (else
+    leafNodeDefaultParallelism, else ``target``), files chunked at
     maxSplitBytes, chunks sorted desc and greedily packed with
     openCost charged per chunk."""
     import os as _os
@@ -117,8 +118,11 @@ def _estimated_scan_splits(
             sizes.append(_os.path.getsize(p))
         except OSError:
             return -1
-    min_pn_raw = spark.conf.get("spark.sql.files.minPartitionNum", None)
-    min_pn = int(min_pn_raw) if min_pn_raw else max(target, 1)
+    min_pn = int(
+        spark.conf.get("spark.sql.files.minPartitionNum", None)
+        or spark.conf.get("spark.sql.leafNodeDefaultParallelism", None)
+        or target
+    )
     total = sum(sizes) + len(sizes) * open_cost
     bytes_per_core = total // max(min_pn, 1)
     max_split = min(max_pb, max(open_cost, bytes_per_core))

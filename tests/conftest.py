@@ -1,8 +1,11 @@
 from __future__ import annotations
 
+import re
+
 import duckdb
 import pytest
 
+from pyspark_airflow_weather_etl_spark.plans import HEAD
 from pyspark_airflow_weather_etl_spark.session import get_spark
 
 SF_DIR = "/root/testdata/sf0.001"
@@ -59,7 +62,10 @@ def duck():
 #
 # and the round-close record runs it. Tests that directly pin this
 # round's changed operator internals stay in the default selection
-# regardless of cost (PRF twin equality, star/label equality).
+# regardless of cost (PRF twin equality, star/label equality), and so
+# does the oracle-parity / rows-only case of every entry in the
+# verification schedule's changed-path head (``plans.HEAD``): a path
+# that changed after its latest driver row is checked by default.
 # ---------------------------------------------------------------------
 SLOW_TESTS = {
     "test_bloom.py::test_no_false_negatives",
@@ -159,9 +165,20 @@ SLOW_TESTS = {
 }
 
 
+PARITY_CASE = re.compile(
+    r"test_oracle_parity\.py::test_(?:oracle_parity|rows_only_queries_run)"
+    r"\[(.+)\]"
+)
+
+
+def marked_slow(nid: str) -> bool:
+    """Whether the test with nodeid ``nid`` (relative to tests/, e.g.
+    "test_bpe.py::test_x") is left out of the default selection."""
+    case = PARITY_CASE.fullmatch(nid)
+    return nid in SLOW_TESTS and not (case and case.group(1) in HEAD)
+
+
 def pytest_collection_modifyitems(config, items):
     for item in items:
-        # nodeid relative to the tests/ dir, e.g. "test_bpe.py::test_x"
-        nid = item.nodeid.split("/")[-1]
-        if nid in SLOW_TESTS:
+        if marked_slow(item.nodeid.split("/")[-1]):
             item.add_marker(pytest.mark.slow)

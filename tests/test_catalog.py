@@ -4,7 +4,16 @@ consistent as entries are added."""
 from __future__ import annotations
 
 import __spark_entry__ as E
-from pyspark_airflow_weather_etl_spark.plans import REGISTRY
+from pyspark_airflow_weather_etl_spark.plans import (
+    CHANGED,
+    HEAD,
+    RECORDS,
+    REGISTRATION_ORDER,
+    REGISTRY,
+    verification_order,
+)
+
+import conftest
 
 
 def test_every_entry_documented():
@@ -144,3 +153,81 @@ def test_rows_only_entries_are_the_documented_sketches():
         # tests/test_streaming.py
         "streaming_pca_project_embeddings",
     }, f"unexpected rows-only set: {rows_only}"
+
+
+# --- the driver's verification schedule (plans/__init__.py) ----------
+
+GREEN = {"hash_match": True, "err": None}
+ROWS_ONLY = {"hash_match": None, "err": "no_oracle"}
+RED = {"hash_match": False, "err": None}
+
+
+def test_registry_order_is_a_permutation_of_registration():
+    assert sorted(REGISTRY) == sorted(REGISTRATION_ORDER)
+    assert len(REGISTRATION_ORDER) == len(set(REGISTRATION_ORDER))
+
+
+def test_changed_names_are_registered():
+    assert CHANGED <= set(REGISTRY), sorted(CHANGED - set(REGISTRY))
+
+
+def test_no_records_is_registration_order_then_head():
+    assert verification_order("abcd", {}) == list("abcd")
+    # the changed-path head follows the never-verified names
+    assert verification_order("abcd", {}, {"c"}, 17) == list("abdc")
+
+
+def test_unverified_first_then_stalest_green():
+    rounds = {
+        3: {"a": GREEN, "b": GREEN, "c": RED},
+        1: {"d": ROWS_ONLY, "e": GREEN},
+        2: {"a": GREEN, "e": GREEN, "gone": GREEN},
+    }
+    # c only red, f never sampled: unverified, in registration order;
+    # then d (r1, a rows-only row counts as green), e (freshest r2), a
+    # and b (freshest r3) — a's r3 row wins over its r2 row, and the
+    # unregistered name is ignored.
+    assert verification_order("abcdef", rounds) == list("cfdeab")
+
+
+def test_red_row_does_not_refresh_a_green_name():
+    rounds = {1: {"a": GREEN, "b": GREEN}, 2: {"a": RED, "c": GREEN}}
+    assert verification_order("cba", rounds) == list("bac")
+
+
+def test_changed_head_follows_unverified_and_expires():
+    rounds = {1: {"a": GREEN, "b": GREEN}, 2: {"c": GREEN}}
+    # b changed after round 2: it jumps every green tier but not the
+    # never-verified d.
+    assert verification_order("abcd", rounds, {"b"}, 2) == list("dbac")
+    # a newer green row retires it into its own tier...
+    rounds[3] = {"b": GREEN}
+    assert verification_order("abcd", rounds, {"b"}, 2) == list("dacb")
+    # ...but a newer red row does not.
+    rounds[3] = {"b": RED}
+    assert verification_order("abcd", rounds, {"b"}, 2) == list("dbac")
+
+
+def test_live_order_after_head_skips_the_freshest_record():
+    """The next driver sample after the changed-path head comes from
+    the stale green tiers, never from the freshest record."""
+    order = list(REGISTRY)
+    start = max((order.index(n) + 1 for n in HEAD), default=0)
+    assert not set(order[start : start + 50]) & set(RECORDS[max(RECORDS)])
+
+
+def test_changed_head_parity_cases_are_default_selected():
+    """Oracle-parity / rows-only cases of changed-path entries run in
+    the default (``-m "not slow"``) selection even when profiled slow."""
+    for name in HEAD:
+        test = (
+            "test_oracle_parity"
+            if REGISTRY[name].oracle
+            else "test_rows_only_queries_run"
+        )
+        assert not conftest.marked_slow(
+            f"test_oracle_parity.py::{test}[{name}]"
+        ), name
+    assert any(
+        conftest.PARITY_CASE.fullmatch(nid) for nid in conftest.SLOW_TESTS
+    )

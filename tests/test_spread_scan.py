@@ -4,6 +4,7 @@ FilePartitions, so file count alone never proves parallelism."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from pyspark_airflow_weather_etl_spark.operators.dedup import (
@@ -43,13 +44,24 @@ def test_large_scan_short_circuits(spark):
     assert "Repartition" not in out._jdf.queryExecution().logical().toString()
 
 
-def test_split_estimate_matches_spark_packing(spark, tmp_path):
-    """Round-17 guard rewrite: the driver-side split estimate
-    (_estimated_scan_splits — FilePartition arithmetic over os.stat
-    sizes) must agree with the split count Spark actually gives the
-    scan (df.rdd.getNumPartitions(), the old guard's source of
-    truth), across one-file, many-tiny-files and multi-row-group
-    layouts — otherwise the repartition decision silently changes."""
+@pytest.mark.parametrize(
+    "conf",
+    [
+        {},
+        {"spark.sql.files.minPartitionNum": "3"},
+        {"spark.sql.leafNodeDefaultParallelism": "2"},
+        {"spark.sql.leafNodeDefaultParallelism": "64"},
+    ],
+    ids=["default", "minPartitionNum=3", "leaf=2", "leaf=64"],
+)
+def test_split_estimate_matches_spark_packing(spark, tmp_path, conf):
+    """The driver-side split estimate (_estimated_scan_splits —
+    FilePartition arithmetic over os.stat sizes) must agree with the
+    split count Spark actually gives the scan
+    (df.rdd.getNumPartitions()) across one-file and many-tiny-files
+    layouts, and under the session confs FilePartition.maxSplitBytes
+    reads (minPartitionNum, then leafNodeDefaultParallelism) —
+    otherwise the repartition decision silently changes."""
     from pyspark_airflow_weather_etl_spark.operators.dedup import (
         _estimated_scan_splits,
     )
@@ -67,12 +79,18 @@ def test_split_estimate_matches_spark_packing(spark, tmp_path):
     }
     layouts["one"].coalesce(1).write.parquet(str(tmp_path / "one"))
     layouts["many"].repartition(16).write.parquet(str(tmp_path / "many"))
-    for name in layouts:
-        df = spark.read.parquet(str(tmp_path / name))
-        est = _estimated_scan_splits(
-            spark, df.inputFiles(), open_cost, max_pb, target
-        )
-        assert est == df.rdd.getNumPartitions(), name
+    try:
+        for key, value in conf.items():
+            spark.conf.set(key, value)
+        for name in layouts:
+            df = spark.read.parquet(str(tmp_path / name))
+            est = _estimated_scan_splits(
+                spark, df.inputFiles(), open_cost, max_pb, target
+            )
+            assert est == df.rdd.getNumPartitions(), name
+    finally:
+        for key in conf:
+            spark.conf.unset(key)
 
 
 def test_split_estimate_unstatable_falls_back(spark):
